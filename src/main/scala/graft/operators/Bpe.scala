@@ -87,9 +87,9 @@ object Bpe {
     *    row via TakeOrdered (`max count, ties to the binary-smallest
     *    (a, b)` — the [[train]] tie rule);
     *  - the winning pair fuses into the vocab frame (a vocab-sized
-    *    narrow map), lineage cut per round (localCheckpoint — the
-    *    labelPropagation lesson: a 200-round merge table would
-    *    otherwise nest 200 plans deep).
+    *    narrow map), lineage cut on the [[Lifecycle.RoundSink]]
+    *    cadence (the labelPropagation lesson: a 200-round merge table
+    *    would otherwise nest 200 plans deep).
     *
     * Driver state: the merge table itself (nMerges pairs) and one
     * argmax row per round. Bitwise-identical to [[train]] on the same
@@ -119,9 +119,6 @@ object Bpe {
       // split(w, '') keeps a trailing '' element (Java regex split with
       // limit -1) — filter it, single characters only
       .select(expr("filter(split(w, ''), x -> x != '')").as("syms"), col("c")))
-    // the previous cut's scratch files are dead once the next cut
-    // materializes (merges is driver state; nothing re-reads old cuts)
-    var prevCut = vocab
     val merges = mutable.ArrayBuffer.empty[(String, String)]
     val fuseUdf = udf((syms: Seq[String], a: String, b: String) =>
       fuse(syms.toVector, (a, b)))
@@ -142,26 +139,23 @@ object Bpe {
       else {
         val best = (top.head.getString(0), top.head.getString(1))
         merges += best
-        vocab = vocab.select(
+        // lineage cut on the sink's cadence, not every round: the
+        // per-round growth is ONE narrow map (linear, unlike the graph
+        // operators' self-referencing recurrences), so the cadence only
+        // trades plan-analysis time against write-job overhead — 40
+        // rounds at sf0.1 measured 14.8 s with a per-round cut, 5.8 s
+        // warm at the default every-8 cadence. Each cut deletes the one
+        // it supersedes (merges is driver state; nothing re-reads old
+        // cuts).
+        vocab = sink.cut(i + 1, vocab.select(
             fuseUdf(col("syms"), lit(best._1), lit(best._2)).as("syms"),
-            col("c"))
-        // lineage cut every few rounds, not every round: the per-round
-        // growth is ONE narrow map (linear, unlike the graph operators'
-        // self-referencing recurrences), so the checkpoint cadence only
-        // trades plan-analysis time against checkpoint-job overhead —
-        // 40 rounds at sf0.1 measured 14.8 s with a per-round cut,
-        // 5.8 s warm with this every-8 cadence
-        if ((i + 1) % 8 == 0) {
-          vocab = sink.round(vocab)
-          Lifecycle.releaseDiskRound(docs.sparkSession, prevCut)
-          prevCut = vocab
-        }
+            col("c")))
         i += 1
       }
     }
     // the result is the driver-side merge list — no frame escapes, so
     // the last cut's scratch files are dead too
-    Lifecycle.releaseDiskRound(docs.sparkSession, prevCut)
+    sink.close()
     merges.toSeq
   }
 

@@ -391,11 +391,12 @@ object Fusion {
     * Scale posture: duels collapse ONCE to a symmetric (i, j, n_ij)
     * games frame and a per-player wins frame — pair-space sized, never
     * duel-space. Each round is one join of the persisted games frame
-    * with the player-sized strength frame + one map-side-combined sum +
-    * a one-row max broadcast (the [[graft.operators.Graph]] edge-cache
-    * shape); state is one long per player, disk-checkpointed per round
-    * ([[Lifecycle.diskRound]]) so lineage stays flat (the HITS 2^iters
-    * lesson) and no round lives in non-recomputable evictable blocks.
+    * with the player-sized strength frame + one map-side-combined sum,
+    * the rescale max observed by the round's write job (the
+    * [[graft.operators.Graph]] edge-cache shape); state is one long per
+    * player, written per round through a [[Lifecycle.RoundSink]] so
+    * lineage stays flat (the HITS 2^iters lesson) and no round lives in
+    * non-recomputable evictable blocks.
     *
     * Output: `player`, `strength_micro` (leader = 10⁶), `wins`,
     * `games` LONG — total order by player.
@@ -424,14 +425,13 @@ object Fusion {
       .persist()
 
     var strength = players.select(col("player"), lit(1000000L).as("s"))
-    // strength is a lazy view over each round's checkpointed `raw`;
-    // the previous round's raw is dead once the next raw materialized.
+    // strength is a lazy view over each round's written `raw`; the
+    // sink deletes the previous raw once the next one is written.
     // The rescale max is an OBSERVED metric of the round's write job
     // (round 14): the former agg(max) + crossJoin(broadcast) cost one
     // extra scan + one broadcast-exchange job per round; the observed
     // max is the identical exact long, applied as a literal.
     val sink = Lifecycle.roundSink(duels.sparkSession)
-    var prevRaw: DataFrame = null
     var it = 0
     while (it < iters) {
       val terms = games
@@ -451,8 +451,6 @@ object Fusion {
         .select(col("player"), when(col("__t") > 0L, expr(
           "(CAST(wins AS DECIMAL(38,0)) * 1000000000000) DIV __t"))
           .otherwise(0L).as("__raw")), max(col("__raw")).as("__mx"))
-      Lifecycle.releaseDiskRound(duels.sparkSession, prevRaw)
-      prevRaw = raw
       // null max ⇔ zero rows written ⇔ zero rows to scale (and a zero
       // max previously made the DIV yield NULL → greatest picks 1L;
       // inlining 0L reproduces that exactly)
@@ -472,7 +470,7 @@ object Fusion {
         col("games"))
       .orderBy(col("player"))
       .localCheckpoint(true)
-    Lifecycle.releaseDiskRound(duels.sparkSession, prevRaw) // out consumed it
+    sink.close() // out consumed the last raw
     Lifecycle.drainAndUnpersist(duels.sparkSession, games, players, d)
     out
   }

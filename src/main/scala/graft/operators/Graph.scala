@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,17 +23,123 @@ import org.apache.spark.sql.functions._
   * per iteration — a deliberately deterministic leak, far below ranking
   * granularity with init = 1e6.
   *
-  * Scale posture: each iteration is one join of the static
-  * (src, dst, outdeg) edge frame with the current rank frame on `src`
-  * (both hash-partition on the same key — co-partitioned at scale if
-  * edges are bucketed by src) followed by one aggregation shuffle on
-  * `dst`. Iterations are a fixed small count, so the total is
-  * 2·iters bounded shuffles of (id, long) rows — vectors of state never
-  * exceed one long per vertex. i64 headroom: a hub's in-mass times
-  * dampNum must fit 2^63 — with init 1e6 and damp 85/100 that allows
-  * ~10^11 total graph mass, far beyond any real corpus graph's hub.
+  * Scale posture: each iteration joins the static edge frame with the
+  * current rank frame on `src` and aggregates contributions on `dst`
+  * (what the executed plan does with the statics is recorded on
+  * [[Graph.edgeStatic]]). Iterations are a fixed small count, and
+  * state never exceeds one long per vertex. i64 headroom: a hub's
+  * in-mass times dampNum must fit 2^63 — with init 1e6 and damp 85/100
+  * that allows ~10^11 total graph mass, far beyond any real corpus
+  * graph's hub.
   */
 object Graph {
+
+  /** The unweighted edge static the PageRank, PPR, HITS and
+    * label-propagation loops scan every round: canonical (`src`, `dst`)
+    * LONG edges, duplicates collapsed, persisted, plus the persisted
+    * vertex set (every node appearing as src OR dst — a pure source
+    * receives nothing but must survive every round; an inner-join-only
+    * recurrence would drop it and, transitively, its contributions).
+    * `decorate` extends the vertex frame before it is persisted (PPR's
+    * seed flag). The caller releases both frames.
+    *
+    * ONE shuffle builds the edges: the explicit CLUSTER BY src runs
+    * first, and the distinct's ClusteredDistribution(src, dst) is
+    * satisfied by hash(src), so dedup rides the same exchange. The user
+    * repartition is exempt from AQE coalescing, so the cached layout is
+    * a deterministic hash(src). Without the persist, the degree
+    * aggregate, the per-round joins and the vertex set would each re-run
+    * the caller's whole edge construction (a fact⋈dim join + distinct
+    * for q78).
+    *
+    * What the executed plan does with it (final AQE plans of the q78,
+    * q200 and q90 round writes; GraftSession conf, local[4]): every
+    * PageRank/PPR round re-scans the cache and RECOMPUTES the
+    * out-degree aggregate from it (exchange-free on the hash(src)
+    * layout, but never read once). At sf0.1 the degree attach is a
+    * SortMergeJoin in every round, exchange-free on both sides (one
+    * Sort each); at sf0.01 the edges are small enough that AQE
+    * broadcasts them into that join instead. At both sizes the
+    * previous round's state frame (and PPR's seed flag) is broadcast
+    * into the edge side, and a PageRank round shuffles once, on the
+    * in-mass aggregate's key. Label propagation's votes join broadcasts
+    * the winners frame the same way. */
+  private def edgeStatic(edges: DataFrame,
+                         decorate: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val e = edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"))
+      .repartition(col("src")).distinct().persist()
+    (e, vertexSet(e, decorate))
+  }
+
+  private def vertexSet(e: DataFrame, decorate: DataFrame => DataFrame): DataFrame =
+    decorate(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()).persist()
+
+  /** The edge static with each edge's source out-degree `__d` attached,
+    * lazy over the cached edges (see [[edgeStatic]] for its plan). */
+  private def withOutDegree(e: DataFrame): DataFrame =
+    e.join(e.groupBy(col("src")).agg(count(lit(1)).as("__d")), "src")
+
+  /** The fixed-iteration round loop the PageRank family and label
+    * propagation share. `step` builds round i+1's state from round i's
+    * (`None` before round 1: the closed-form seed, no join at all);
+    * `densify` turns the last state into the output.
+    *
+    * Rounds COMPOSE LAZILY: the sink writes a round only on its cut
+    * cadence (deleting the cut it supersedes) and always writes the
+    * densified output, which the returned frame reads. Each round
+    * references the previous state EXACTLY ONCE, so the composed plan
+    * grows linearly (never the 2^iters doubling HITS guards against)
+    * and every shuffle in it executes once. A segment between cuts is a
+    * pure lazy plan over persisted statics and the previous cut's file
+    * scan, so a lost task recomputes at most one segment from durable
+    * inputs.
+    *
+    * ROUND STATE IS SPARSE: a vertex absent from the state frame holds
+    * its closed-form default (PageRank: the base term; label
+    * propagation: its own id), and every static `src` is a vertex, so
+    * the per-round `vertices ⟕ state` densify join folds into the next
+    * round's edge join as an inline coalesce. Vertices are joined ONCE,
+    * in `densify`. */
+  private def fixedRounds(spark: SparkSession, iters: Int)(
+      step: Option[DataFrame] => DataFrame)(
+      densify: DataFrame => DataFrame): DataFrame = {
+    val sink = Lifecycle.roundSink(spark)
+    var state: Option[DataFrame] = None
+    for (i <- 1 until iters) state = Some(sink.cut(i, step(state)))
+    sink.round(densify(step(state)))
+  }
+
+  /** The exact integer rank recurrence shared by the PageRank variants:
+    * each round, every edge of `static` sends the contribution `c0`
+    * (round 1) or `c` (later rounds, over the previous in-mass `__in`,
+    * left-joined on `src`) to its `dst`, and the in-mass is
+    * (dampNum · Σ contrib) DIV dampDen. The output is
+    * `rankBase + coalesce(__in, 0)` for every vertex, then the statics
+    * are released. */
+  private def massRounds(e: DataFrame, vertices: DataFrame,
+                         static: DataFrame, iters: Int,
+                         dampNum: Long, dampDen: Long,
+                         c0: String, c: String, rankBase: Column): DataFrame = {
+    val spark = e.sparkSession
+    val out = fixedRounds(spark, iters) { sums =>
+      sums.fold(static.select(col("dst").as("node"), expr(c0).as("__c"))) { s =>
+        static.join(s, static("src") === s("node"), "left")
+          .select(col("dst").as("node"), expr(c).as("__c"))
+      }.groupBy(col("node"))
+        .agg(expr(s"($dampNum * sum(__c)) DIV $dampDen").as("__in"))
+    } { sums =>
+      vertices.join(sums, Seq("node"), "left")
+        .select(col("node"), (rankBase + coalesce(col("__in"), lit(0L))).as("rank"))
+    }
+    // the output is materialized; release the statics only after the
+    // session's async exchange jobs drain — see
+    // [[Lifecycle.drainAndUnpersist]] for the race this closes
+    Lifecycle.drainAndUnpersist(spark, vertices, e)
+    out
+  }
 
   /** PageRank over a directed edge list (`src`, `dst` — pass both
     * directions for an undirected graph). Duplicate edges are collapsed.
@@ -48,112 +154,12 @@ object Graph {
     require(iters >= 1, "need at least one iteration")
     require(dampNum > 0 && dampNum < dampDen, "damping in (0,1)")
     val base = init * (dampDen - dampNum) / dampDen
-
-    // the canonical edge set feeds the degree agg, the contribution
-    // join, AND the vertex set — without persisting it here, each of
-    // those consumers re-runs the caller's whole construction lineage
-    // (for the q78 graph: a fact⋈dim join + distinct, re-executed ~4×
-    // before the first iteration starts; measured 1.5 s off the probe)
-    // ONE shuffle builds the whole static (round 14, guide §2.4): the
-    // explicit CLUSTER BY src runs FIRST, and the distinct's
-    // ClusteredDistribution(src,dst) is satisfied by hash(src) — rows
-    // with equal (src,dst) share a src — so dedup rides the same
-    // exchange (the former distinct-then-repartition shape paid two
-    // full-edge shuffles to reach the same layout). The user
-    // repartition is exempt from AQE coalescing, so the cached layout
-    // is a deterministic hash(src) — bucketed edge storage in DataFrame
-    // form: at the scale where the rank frame outgrows broadcast, every
-    // iteration's contributions join reads the cache exchange-free and
-    // only the rank side shuffles.
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")).distinct().persist()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__d"))
-    // eDeg stays LAZY over the cached edge frame: deg aggregates
-    // exchange-free on e's clustering and the attach join is broadcast
-    // (locally) or co-partitioned (at scale), so each round's scan of
-    // `eDeg` costs one cache read + one reused-broadcast probe — a
-    // second full persisted copy of the edges bought nothing (and at
-    // 100 TB would double the cache footprint; §5).
-    val eDeg = e.join(deg, "src")
-    // the full vertex set: a node with out-edges only (pure source)
-    // receives nothing but must survive every iteration at `base`; an
-    // inner-join-only recurrence would drop it (and, transitively, its
-    // contributions) — on a directed chain the frame would empty out
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-
-    // Rounds COMPOSE LAZILY and materialize to reliable storage
-    // ([[Lifecycle.RoundSink]] parquet scratch) only every
-    // `spark.graft.round.cutEvery` rounds and at the end. Each round
-    // references the previous state frame EXACTLY ONCE, so the composed
-    // plan grows linearly (never the 2^iters doubling the HITS comments
-    // guard against), and every shuffle in it executes exactly once.
-    // Recomputability is intact: a segment between cuts is a pure lazy
-    // plan over the persisted statics and the previous cut's file scan,
-    // so a lost task recomputes at most `cutEvery` rounds from durable
-    // inputs — there is still no non-recomputable block anywhere. The
-    // FINAL round is always materialized (the statics below are
-    // released before returning, so the returned frame must not read
-    // them).
-    //
-    // ROUND STATE IS THE SPARSE IN-MASS FRAME, NOT DENSE RANKS (round
-    // 14, guide §1.2 fewer passes / §2.4 remove joins): rank_i(v) =
-    // base + coalesce(__in_i(v), 0) for every vertex, and every eDeg.src
-    // IS a vertex, so the per-round `vertices ⟕ sums` densify join can
-    // fold into the NEXT round's edge join as an inline coalesce —
-    // eliminating one broadcast-join stage (and one vertex-frame scan)
-    // per round. The measured job structure, not the write count, was
-    // the family's floor: a q78 round cost 3 AQE stage-jobs (rank
-    // broadcast build + contribution shuffle + densify broadcast build)
-    // of which the densify is pure bookkeeping. Vertices are joined
-    // ONCE, at the final densify — where pure sources (never in any
-    // sums frame) surface at exactly `base`, the same value the old
-    // per-round left join gave them every round. Integer arithmetic is
-    // untouched: identical sums in a different plan shape (q78 oracle
-    // replays it bit-for-bit).
-    val spark = edges.sparkSession
-    val cutEvery = math.max(1, spark.conf
-      .getOption("spark.graft.round.cutEvery").map(_.toInt).getOrElse(8))
-    val sink = Lifecycle.roundSink(spark)
-    var sums: DataFrame = null // null ⇔ round 0: rank = init literal
-    var disk: DataFrame = null
-    var out: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      // rank(src) inline: round 0 is the init literal (no join at all);
-      // later rounds left-join the previous sparse in-mass frame
-      val contribs =
-        if (sums == null)
-          eDeg.select(col("dst").as("node"),
-            expr(s"${init}L DIV __d").as("__c"))
-        else eDeg.join(sums, eDeg("src") === sums("node"), "left")
-          .select(col("dst").as("node"),
-            expr(s"(${base}L + coalesce(__in, 0L)) DIV __d").as("__c"))
-      sums = contribs.groupBy(col("node"))
-        .agg(expr(s"($dampNum * sum(__c)) DIV $dampDen").as("__in"))
-      i += 1
-      if (i == iters) {
-        // final cut carries the DENSIFIED output: every vertex, pure
-        // sources at base — one write, no separate materialization
-        out = sink.round(vertices.join(sums, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + coalesce(col("__in"), lit(0L))).as("rank")))
-        Lifecycle.releaseDiskRound(spark, disk)
-      } else if (i % cutEvery == 0) {
-        val mat = sink.round(sums)
-        // the superseded cut's scratch files are dead the moment `mat`
-        // materializes — delete them instead of letting them pile up
-        Lifecycle.releaseDiskRound(spark, disk)
-        disk = mat
-        sums = mat
-      }
-    }
-    // the last cut IS the (already materialized) output; release the
-    // statics only after the session's async exchange jobs drain — see
-    // [[Lifecycle.drainAndUnpersist]] for the race this closes
-    Lifecycle.drainAndUnpersist(spark, vertices, e)
-    out
+    val (e, vertices) = edgeStatic(edges)
+    // rank_i(v) = base + coalesce(__in_i(v), 0); round 1's rank is init
+    massRounds(e, vertices, withOutDegree(e), iters, dampNum, dampDen,
+      c0 = s"${init}L DIV __d",
+      c = s"(${base}L + coalesce(__in, 0L)) DIV __d",
+      rankBase = lit(base))
   }
 
   /** Degree assortativity: the Pearson correlation between the
@@ -243,12 +249,9 @@ object Graph {
     require(iters >= 1, "need at least one iteration")
     require(dampNum > 0 && dampNum < dampDen, "damping in (0,1)")
     val base = init * (dampDen - dampNum) / dampDen
-    // one shuffle builds the static (round 14): CLUSTER BY src first —
-    // the multigraph weight-sum's ClusteredDistribution(src,dst) is
-    // satisfied by hash(src), the out-weight total aggregates
-    // exchange-free on the same layout, and the attach join stays lazy
-    // (broadcast locally, co-partitioned at scale) — see
-    // [[pagerankMicro]]'s static-construction note
+    // one shuffle builds the static, as in [[edgeStatic]]: the
+    // multigraph weight-sum's ClusteredDistribution(src, dst) is
+    // satisfied by the CLUSTER BY src that runs first
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"),
         col("weight").cast("long").as("__w"))
@@ -257,48 +260,10 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w"))
       .persist()
     val wTot = e.groupBy(col("src")).agg(sum(col("__w")).as("__wt"))
-    val eW = e.join(wTot, "src")
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-
-    // lazy round composition with every-k lineage cuts, round state =
-    // the SPARSE in-mass frame with the densify join folded into the
-    // next round's edge join — see [[pagerankMicro]]'s round-14 note
-    // (identical integer sums in a plan with one join fewer per round)
-    val spark = edges.sparkSession
-    val cutEvery = math.max(1, spark.conf
-      .getOption("spark.graft.round.cutEvery").map(_.toInt).getOrElse(8))
-    val sink = Lifecycle.roundSink(spark)
-    var sums: DataFrame = null // null ⇔ round 0: rank = init literal
-    var disk: DataFrame = null
-    var out: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val contribs =
-        if (sums == null)
-          eW.select(col("dst").as("node"),
-            expr(s"(CAST(${init} AS DECIMAL(38,0)) * __w) div __wt").as("__c"))
-        else eW.join(sums, eW("src") === sums("node"), "left")
-          .select(col("dst").as("node"),
-            expr(s"(CAST(${base}L + coalesce(__in, 0L) AS DECIMAL(38,0)) * __w) div __wt")
-              .as("__c"))
-      sums = contribs.groupBy(col("node"))
-        .agg(expr(s"($dampNum * sum(__c)) DIV $dampDen").as("__in"))
-      i += 1
-      if (i == iters) {
-        out = sink.round(vertices.join(sums, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + coalesce(col("__in"), lit(0L))).as("rank")))
-        Lifecycle.releaseDiskRound(spark, disk)
-      } else if (i % cutEvery == 0) {
-        val mat = sink.round(sums)
-        Lifecycle.releaseDiskRound(spark, disk)
-        disk = mat
-        sums = mat
-      }
-    }
-    Lifecycle.drainAndUnpersist(spark, vertices, e)
-    out
+    massRounds(e, vertexSet(e, identity), e.join(wTot, "src"), iters, dampNum, dampDen,
+      c0 = s"(CAST(${init} AS DECIMAL(38,0)) * __w) div __wt",
+      c = s"(CAST(${base}L + coalesce(__in, 0L) AS DECIMAL(38,0)) * __w) div __wt",
+      rankBase = lit(base))
   }
 
   /** Personalized PageRank: [[pagerankMicro]]'s teleport redirected to a
@@ -319,12 +284,10 @@ object Graph {
     * integer sums and truncating DIVs — bit-identical on any engine and
     * any layout, replayable in SQL as an unrolled CTE chain.
     *
-    * Scale posture: identical to [[pagerankMicro]] (2 bounded shuffles
-    * per iteration over the clustered static edge cache) plus one
-    * broadcast-sized seed join per iteration (seeds are a left-semi
-    * membership flag on the vertex frame, computed once, not per
-    * round). Seeds not present in the graph are ignored (they have no
-    * edges to walk). Returns (`node` LONG, `rank` LONG micro-units). */
+    * Seed membership is a flag computed once on the static edges and
+    * once on the vertex frame, never per round. Seeds not present in
+    * the graph are ignored (they have no edges to walk). Returns
+    * (`node` LONG, `rank` LONG micro-units). */
   def personalizedPagerankMicro(edges: DataFrame, seeds: DataFrame,
                                 iters: Int,
                                 dampNum: Long = 85L, dampDen: Long = 100L,
@@ -332,72 +295,20 @@ object Graph {
     require(iters >= 1, "need at least one iteration")
     require(dampNum > 0 && dampNum < dampDen, "damping in (0,1)")
     val base = init * (dampDen - dampNum) / dampDen
-    // one shuffle builds the static: CLUSTER BY src first, dedup rides
-    // the same exchange — see [[pagerankMicro]]'s construction note
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")).distinct().persist()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__d"))
     val seedSet = seeds.select(col("node").cast("long").as("node")).distinct()
-    // the src-side seed flag rides the static (lazy over the cached
-    // edges: degree aggregates exchange-free, both attaches broadcast),
-    // so the per-round inline rank expression — see [[pagerankMicro]]'s
-    // round-14 densify-fold note — computes [seed]·base without any
-    // per-round vertex join
-    val eDeg = e.join(deg, "src")
+    val (e, vertices) = edgeStatic(edges, _
+      .join(seedSet.withColumn("__seed", lit(true)), Seq("node"), "left")
+      .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed")))
+    val eDeg = withOutDegree(e)
       .join(seedSet.select(col("node").as("src"), lit(true).as("__s")),
         Seq("src"), "left")
       .select(col("src"), col("dst"), col("__d"),
         coalesce(col("__s"), lit(false)).as("__seed"))
-    // membership flag computed ONCE on the vertex frame — the FINAL
-    // densify (the only vertex join left) reuses it
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(seedSet.withColumn("__seed", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__seed"), lit(false)).as("__seed"))
-      .persist()
-
-    // lazy round composition with every-k lineage cuts, round state =
-    // the sparse in-mass frame (densify folded into the edge join) —
-    // see [[pagerankMicro]]'s round-14 note; the seed-conditional base
-    // term rides the static's __seed flag
-    val spark = edges.sparkSession
-    val cutEvery = math.max(1, spark.conf
-      .getOption("spark.graft.round.cutEvery").map(_.toInt).getOrElse(8))
-    val sink = Lifecycle.roundSink(spark)
-    var sums: DataFrame = null // null ⇔ round 0: rank = [seed]·init
-    var disk: DataFrame = null
-    var out: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val contribs =
-        if (sums == null)
-          eDeg.select(col("dst").as("node"),
-            expr(s"(CASE WHEN __seed THEN ${init}L ELSE 0L END) DIV __d")
-              .as("__c"))
-        else eDeg.join(sums, eDeg("src") === sums("node"), "left")
-          .select(col("dst").as("node"),
-            expr(s"((CASE WHEN __seed THEN ${base}L ELSE 0L END) " +
-              "+ coalesce(__in, 0L)) DIV __d").as("__c"))
-      sums = contribs.groupBy(col("node"))
-        .agg(expr(s"($dampNum * sum(__c)) DIV $dampDen").as("__in"))
-      i += 1
-      if (i == iters) {
-        out = sink.round(vertices.join(sums, Seq("node"), "left")
-          .select(col("node"),
-            (when(col("__seed"), lit(base)).otherwise(lit(0L))
-              + coalesce(col("__in"), lit(0L))).as("rank")))
-        Lifecycle.releaseDiskRound(spark, disk)
-      } else if (i % cutEvery == 0) {
-        val mat = sink.round(sums)
-        Lifecycle.releaseDiskRound(spark, disk)
-        disk = mat
-        sums = mat
-      }
-    }
-    Lifecycle.drainAndUnpersist(spark, vertices, e)
-    out
+    massRounds(e, vertices, eDeg, iters, dampNum, dampDen,
+      c0 = s"(CASE WHEN __seed THEN ${init}L ELSE 0L END) DIV __d",
+      c = s"((CASE WHEN __seed THEN ${base}L ELSE 0L END) " +
+        "+ coalesce(__in, 0L)) DIV __d",
+      rankBase = when(col("__seed"), lit(base)).otherwise(lit(0L)))
   }
 
   /** HITS (Kleinberg's hubs & authorities) over a directed edge list,
@@ -426,78 +337,51 @@ object Graph {
     * frame (an inner-join recurrence would silently drop them, and
     * transitively their contributions).
     *
-    * Scale posture: per iteration, two equi-joins of the clustered
-    * static edge cache against the one-long-per-node score frame and two
-    * map-side-combined aggregations — the same 2-shuffles-per-round
-    * budget as PageRank — plus two ONE-ROW max aggregates broadcast back
-    * (the bounded-broadcast exception, as in Quality.freshness). Returns
-    * (`node` LONG, `hub` LONG, `auth` LONG) micro-units. */
+    * Per iteration: two equi-joins of the static edge cache against the
+    * one-long-per-node score frame and two map-side-combined
+    * aggregations, each half-round's rescale max observed by its write
+    * job. Returns (`node` LONG, `hub` LONG, `auth` LONG) micro-units. */
   def hitsMicro(edges: DataFrame, iters: Int, init: Long = 1000000L): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    // one shuffle builds the static: CLUSTER BY src first, dedup rides
-    // the same exchange — see [[pagerankMicro]]'s construction note
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")).distinct().persist()
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val (e, vertices) = edgeStatic(edges)
 
     // one rescaled half-round: raw sums → ppm-of-max. The raw frame
-    // feeds BOTH the max aggregate and the scale join — without an
-    // eager materialization here, the recurrence would sit in the plan
-    // TWICE per half-round and re-execution would grow 2^(2·iters)
-    // (measured: 108 s for 3 iterations on the sf0.1 layer graph vs
-    // ~5 s checkpointed — the labelPropagation lesson, doubled by the
-    // max consumer). The checkpointed frame is one long per scored
-    // node, so the barrier costs O(V), not plan depth.
+    // feeds BOTH the max and the scale projection — without an eager
+    // materialization here, the recurrence would sit in the plan TWICE
+    // per half-round and re-execution would grow 2^(2·iters) (measured:
+    // 108 s for 3 iterations on the sf0.1 layer graph vs ~5 s written
+    // per half-round). The written frame is one long per scored node,
+    // so the barrier costs O(V), not plan depth.
     //
     // Scores stay SPARSE between rounds: a node absent from the frame
     // scores 0, and a zero score contributes exactly nothing to the
-    // next half-round's sums — so the per-half-round V-sized densify
-    // join the earlier shape paid (vertices left-join + coalesce 0) is
-    // deferred to ONE final pass.
-    // returns (scaled-lazy-view, the checkpointed raw backing it) so
-    // the loop can release a raw's blocks the moment the NEXT
-    // half-round's checkpoint has consumed it. The rescale max is an
-    // OBSERVED metric of the write job itself (round 14): the former
-    // `agg(max)` + crossJoin(broadcast) cost one extra scan + one
-    // broadcast-exchange job per half-round; the observed max is the
-    // identical exact long, folded into the one unavoidable action and
-    // applied as a literal.
-    val sink = Lifecycle.roundSink(edges.sparkSession)
-    def rescale(rawLazy: DataFrame): (DataFrame, DataFrame) = {
+    // next half-round's sums — so the V-sized densify join is deferred
+    // to ONE final pass. The rescale max is an OBSERVED metric of the
+    // write job itself (round 14), applied as a literal.
+    //
+    // The auth and hub chains interleave through ONE sink (each write
+    // is sized from the previous write's bytes), which keeps the last
+    // two rounds: a half-round's raw is dead once the same chain's next
+    // raw is written, and the final auth/hub raws stay until the
+    // densify below has read them.
+    val sink = Lifecycle.roundSink(edges.sparkSession, keep = 2)
+    def rescale(rawLazy: DataFrame): DataFrame = {
       val (raw, m) = sink.roundObserved(rawLazy, max(col("__raw")).as("__mx"))
       // null max ⇔ zero rows written ⇔ zero rows to scale; 1 avoids a
       // useless div-by-null expression on the empty frame
       val mx = Option(m("__mx")).map(_.asInstanceOf[Number].longValue)
         .getOrElse(1L)
-      (raw.select(col("node2").as("node"),
-        expr(s"(CAST(__raw AS DECIMAL(38,0)) * 1000000) div ${mx}L").as("score")),
-        raw)
+      raw.select(col("node2").as("node"),
+        expr(s"(CAST(__raw AS DECIMAL(38,0)) * 1000000) div ${mx}L").as("score"))
     }
 
-    val spark = edges.sparkSession
     var hubs = vertices.withColumn("score", lit(init))
     var auths: DataFrame = hubs
-    // superseded-raw bookkeeping: a half-round's raw is dead as soon as
-    // the next half-round's checkpoint materialized from it; the LAST
-    // auth/hub raws must survive until the densify below has run
-    var rawAuth: DataFrame = null
-    var rawHub: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val (a, ra) = rescale(
-        e.join(hubs, e("src") === hubs("node"))
-          .groupBy(e("dst").as("node2")).agg(sum(col("score")).as("__raw")))
-      Lifecycle.releaseDiskRound(spark, rawHub) // consumed into ra
-      auths = a
-      val (h, rh) = rescale(
-        e.join(auths, e("dst") === auths("node"))
-          .groupBy(e("src").as("node2")).agg(sum(col("score")).as("__raw")))
-      Lifecycle.releaseDiskRound(spark, rawAuth) // consumed into rh
-      hubs = h
-      rawAuth = ra; rawHub = rh
-      i += 1
+    for (_ <- 1 to iters) {
+      auths = rescale(e.join(hubs, e("src") === hubs("node"))
+        .groupBy(e("dst").as("node2")).agg(sum(col("score")).as("__raw")))
+      hubs = rescale(e.join(auths, e("dst") === auths("node"))
+        .groupBy(e("src").as("node2")).agg(sum(col("score")).as("__raw")))
     }
     // densify ONCE: every vertex appears, absentees at 0 (exactly the
     // value the sparse frames implied all along)
@@ -507,8 +391,8 @@ object Graph {
       .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
       .localCheckpoint(true)
-    Lifecycle.releaseDiskRound(spark, rawAuth, rawHub) // densify consumed them
-    Lifecycle.drainAndUnpersist(spark, e, vertices)
+    sink.close() // the densify consumed the last raws
+    Lifecycle.drainAndUnpersist(edges.sparkSession, e, vertices)
     out
   }
 
@@ -522,82 +406,38 @@ object Graph {
     * structure; that too is deterministic and both engines agree. Pass
     * both edge directions for the undirected variant.
     *
-    * Scale posture: per round, one join of the persisted edge frame
-    * with the (node, label) frame on `src` — both keyed by node id —
-    * one (dst, label)-keyed count with map-side combine, and one
-    * argmax window bounded by each node's distinct neighbor-label
-    * count. State is one long per node. Returns (`node`, `label`). */
+    * Per round: one join of the edge static with the sparse winners
+    * frame on `src`, one (dst, label)-keyed count with map-side combine,
+    * and one argmax aggregate. State is one long per node. Returns
+    * (`node`, `label`). */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    // CLUSTER BY src before persisting — same bucketed-edge discipline
-    // (and same honest caveats) as [[pagerankMicro]]: at scale the
-    // per-round votes join reads the cached edges exchange-free and
-    // only the (node, label) frame shuffles; at local SFs the label
-    // frame broadcasts and the clustering is layout insurance.
-    // one shuffle builds the static: CLUSTER BY src first, dedup rides
-    // the same exchange — see [[pagerankMicro]]'s construction note
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-      .repartition(col("src")).distinct().persist()
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-
-    // lazy round composition with every-k lineage cuts — see
-    // [[pagerankMicro]]'s round-14 note. Each round references the
-    // previous labels exactly once (inside `winners`), so the composed
-    // plan is LINEAR in rounds — the 2^iters doubling this loop's
-    // earlier join-to-labels form measured (26 s for 3 rounds) came
-    // from a second reference per round, which the vertex-frame rebuild
-    // below already eliminated.
-    //
-    // ROUND STATE IS THE SPARSE WINNERS FRAME (round-14 densify fold,
-    // [[pagerankMicro]]): label_i(v) = coalesce(winner_i(v), v) — a node
-    // absent from `winners` has in-degree 0 and can never have left its
-    // initial label — so the per-round `vertices ⟕ winners` rebuild
-    // folds into the next round's votes join as an inline coalesce, and
-    // the vertex frame is joined ONCE at the end.
-    val spark = edges.sparkSession
-    val cutEvery = math.max(1, spark.conf
-      .getOption("spark.graft.round.cutEvery").map(_.toInt).getOrElse(8))
-    val sink = Lifecycle.roundSink(spark)
-    var winners: DataFrame = null // null ⇔ round 0: label(src) = src
-    var disk: DataFrame = null
-    var out: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val votes =
-        if (winners == null) e.select(col("src"), col("dst"),
-          col("src").as("label"))
-        else e.join(winners, e("src") === winners("node"), "left")
+    val (e, vertices) = edgeStatic(edges)
+    // label_i(v) = coalesce(winner_i(v), v): a node absent from the
+    // winners frame has in-degree 0 and never left its initial label.
+    // Each round references the previous winners exactly once — the
+    // 2^iters doubling an earlier join-to-labels form measured (26 s
+    // for 3 rounds) came from a second reference per round.
+    val out = fixedRounds(edges.sparkSession, iters) { winners =>
+      val votes = winners.fold(
+        e.select(col("src"), col("dst"), col("src").as("label"))) { w =>
+        e.join(w, e("src") === w("node"), "left")
           .select(col("src"), col("dst"),
             coalesce(col("__new"), col("src")).as("label"))
-      val counts = votes
-        .groupBy(col("dst").as("node2"), col("label"))
-        .agg(count(lit(1)).as("__c"))
+      }
       // argmax(count) with smallest-label ties as ONE hash aggregate:
       // lexicographic min of (−count, label) — a row_number window here
       // would add a full sort per round (measured 2× slower end-to-end)
-      winners = counts
+      votes.groupBy(col("dst").as("node2"), col("label"))
+        .agg(count(lit(1)).as("__c"))
         .groupBy(col("node2"))
         .agg(min(struct((-col("__c")).as("nc"), col("label"))).as("__m"))
         .select(col("node2").as("node"), col("__m.label").as("__new"))
-      i += 1
-      if (i == iters) {
-        out = sink.round(vertices.join(winners, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__new"), col("node")).as("label")))
-        Lifecycle.releaseDiskRound(spark, disk)
-      } else if (i % cutEvery == 0) {
-        val mat = sink.round(winners)
-        Lifecycle.releaseDiskRound(spark, disk)
-        disk = mat
-        winners = mat
-      }
+    } { winners =>
+      vertices.join(winners, Seq("node"), "left")
+        .select(col("node"), coalesce(col("__new"), col("node")).as("label"))
     }
-    // the last cut IS the materialized output; release the statics
-    // (a lazily-returned frame would pin them forever) only after the
-    // async exchange jobs drain — see [[Lifecycle.drainAndUnpersist]]
-    Lifecycle.drainAndUnpersist(spark, e, vertices)
+    Lifecycle.drainAndUnpersist(edges.sparkSession, e, vertices)
     out
   }
 
@@ -802,6 +642,9 @@ object Graph {
         .distinct()
     }
 
+    // `init` stays outside the sink's chain: the node-set union below
+    // still reads it. The returned frame reads the last round, so the
+    // sink is never closed.
     val sink = Lifecycle.roundSink(pairs.sparkSession)
     var edges = init
     var sig = sigOf(m0)
@@ -812,10 +655,6 @@ object Graph {
         sigMetrics: _*)
       val nextSig = sigOf(m)
       converged = nextSig == sig
-      // the superseded round is dead once `next` materialized — but
-      // NEVER `init`, which the node-set union below still reads
-      if (edges ne init)
-        Lifecycle.releaseDiskRound(pairs.sparkSession, edges)
       edges = next
       sig = nextSig
       iter += 1
@@ -999,8 +838,8 @@ object Graph {
     * and above-k values together map-side (replacing the former
     * `distinct()` + `topKPerKey` double shuffle; the snapshot is a
     * free projection of the array, not another groupBy). Lineage cut
-    * per round (localCheckpoint), driver state none. KMV over HLL here
-    * for one reason: bottom-k unions are EXACT while the set fits
+    * per round (a scratch round write), driver state none. KMV over
+    * HLL here for one reason: bottom-k unions are EXACT while the set fits
     * (n_sig < k ⇒ exact reach, gate-able), where HLL is approximate
     * from the first element.
     *
@@ -1051,8 +890,9 @@ object Graph {
     // sig rounds go through a RoundSink: every round after the first is
     // coalesced to ceil(measured bytes / target) files — sketch state
     // is O(V·k) bytes regardless of cluster width, so the per-round
-    // write stops paying `cores` tasks+files (the r13 anti-scaling)
-    val sink = Lifecycle.roundSink(edges.sparkSession)
+    // write stops paying `cores` tasks+files (the r13 anti-scaling).
+    // The sink keeps EVERY round: the returned union reads each hop's.
+    val sink = Lifecycle.roundSink(edges.sparkSession, keep = Int.MaxValue)
     var sig = sink.round(
       adj.select(col("u"), fh(col("v")).as("__h"))
         .groupBy(col("u")).agg(bk(col("__h")).as("__sig")))
@@ -1094,8 +934,8 @@ object Graph {
     * Scale posture: per round, one degree aggregate (node-keyed,
     * map-side combined) and two semi-joins of the edge list against the
     * surviving-node set — all equi-joins on node ids; lineage is cut
-    * per round (localCheckpoint) so plans stay flat; driver state is
-    * one Boolean (did the round shrink the edge count).
+    * per round (a scratch round write) so plans stay flat; driver
+    * state is one Boolean (did the round shrink the edge count).
     *
     * Input edges are canonicalized (undirected, self-loops dropped,
     * duplicates collapsed). Output: surviving `node`, `deg` LONG (degree
@@ -1119,7 +959,11 @@ object Graph {
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .distinct(), nMetric)
+    // e0 joins the sink's chain without sizing its writes (round 1
+    // keeps the producer's layout); each round deletes the one it
+    // supersedes, and the returned frame reads the last
     val sink = Lifecycle.roundSink(edges.sparkSession)
+    sink.adopt(e0)
     var e = e0
     var nEdges = nOf(m0)
     var i = 0
@@ -1130,8 +974,6 @@ object Graph {
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b")), nMetric)
-      // superseded round — files dead once `next` materialized
-      Lifecycle.releaseDiskRound(edges.sparkSession, e)
       e = next
       val n = nOf(m)
       done = n == nEdges

@@ -32,12 +32,16 @@ private[graft] object Lifecycle {
   // ------------------------------------------------------------------
   // SUBSTRATE POLICY (round 14) — where eager materialization lives:
   //
-  //  1. Per-round LOOP state → [[RoundSink]]/[[diskRound]] parquet
+  //  1. Per-round LOOP state → one [[RoundSink]] per loop, parquet
   //     scratch: recomputable file scans, never evictable
-  //     non-recomputable blocks. Loops whose round references the
+  //     non-recomputable blocks. The sink owns the round lifecycle:
+  //     it holds the cut cadence (loops whose round references the
   //     previous state exactly once COMPOSE LAZILY and cut lineage
-  //     every `spark.graft.round.cutEvery` rounds (default 8) — the
-  //     per-round write tax was 80–90 % of graph-family wall time.
+  //     every `spark.graft.round.cutEvery` rounds, default 8 — the
+  //     per-round write tax was 80–90 % of graph-family wall time),
+  //     deletes each superseded round once the next one is on disk,
+  //     and deletes the rounds it still holds when the caller closes
+  //     it. Loops keep no scratch frames of their own.
   //  2. Mid-call STAGING read by several consumers (or whose baked-in
   //     partition ids both passes must agree on) that SCALES WITH DATA
   //     → [[diskRound]]. An evicted localCheckpoint block there is a
@@ -71,9 +75,9 @@ private[graft] object Lifecycle {
   // back — the round frames are O(V) rows of longs, so the write is a
   // fast narrow job, and the read-back plan is recomputable FOREVER
   // (a lost scan task just re-reads the file). Superseded rounds are
-  // deleted promptly ([[releaseDiskRound]]); the FINAL round's files —
-  // which the returned frame still reads — live until the scratch
-  // root's shutdown-hook cleanup.
+  // deleted promptly ([[RoundSink]], [[releaseDiskRound]]); rounds the
+  // returned frame still reads live until the scratch root's
+  // shutdown-hook cleanup.
   //
   // Cluster posture: the default scratch root is `java.io.tmpdir`,
   // correct for local[*] (one JVM, one filesystem). On a real cluster
@@ -217,10 +221,26 @@ private[graft] object Lifecycle {
     * run beat 32-core 0.27–0.44×). With the sink, the same round is one
     * task and one file at any width — and a genuinely large round
     * (bytes ≥ target × parallelism) keeps full width, so the setting is
-    * scale-adaptive, not a local[32] constant. */
-  final class RoundSink private[Lifecycle] (spark: SparkSession) {
+    * scale-adaptive, not a local[32] constant.
+    *
+    * The sink is also the loop's whole round lifecycle, so no operator
+    * decides cadence or deadness itself:
+    *  - [[cut]] decides whether round i is written or stays lazy, from
+    *    `spark.graft.round.cutEvery` (default 8; read nowhere else);
+    *  - every write deletes the chain's oldest round once more than
+    *    `keep` rounds are on disk — `keep` = 1 for a plain recurrence,
+    *    2 for two interleaved chains (HITS' auth/hub), unbounded when
+    *    the result reads every round (reach-profile hops);
+    *  - [[close]] deletes the rounds still held, once the caller's
+    *    output no longer reads them. A loop whose returned frame reads
+    *    its last round never closes; those files live until the
+    *    scratch root's shutdown cleanup. */
+  final class RoundSink private[Lifecycle] (spark: SparkSession, keep: Int) {
     private val target = spark.conf.getOption("spark.graft.round.targetFileBytes")
       .map(_.toLong).getOrElse(64L << 20)
+    private val cutEvery = math.max(1, spark.conf
+      .getOption("spark.graft.round.cutEvery").map(_.toInt).getOrElse(8))
+    private val live = scala.collection.mutable.Queue.empty[DataFrame]
     private var lastBytes = -1L
     private def files: Int =
       if (lastBytes < 0) 0
@@ -232,21 +252,39 @@ private[graft] object Lifecycle {
     def roundObserved(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
       val (out, bytes, m) = writeRead(df, files, metrics)
       if (bytes >= 0) lastBytes = bytes
+      adopt(out)
       (out, m)
+    }
+    /** Round `i` (1-based) of a lazily composing loop: written when `i`
+      * falls on the cut cadence, else returned as the lazy plan. */
+    def cut(i: Int, df: DataFrame): DataFrame =
+      if (i % cutEvery == 0) round(df) else df
+    /** Make an already-materialized scratch frame the chain's newest
+      * round, so the sink deletes it like its own — without letting its
+      * bytes size the next write. */
+    def adopt(df: DataFrame): Unit = {
+      live.enqueue(df)
+      if (live.size > keep) releaseDiskRound(spark, live.dequeue())
+    }
+    /** The caller's output no longer reads the chain: delete its rounds. */
+    def close(): Unit = {
+      releaseDiskRound(spark, live.toSeq: _*)
+      live.clear()
     }
   }
 
-  def roundSink(spark: SparkSession): RoundSink = new RoundSink(spark)
+  def roundSink(spark: SparkSession, keep: Int = 1): RoundSink =
+    new RoundSink(spark, keep)
 
-  /** Delete the scratch files behind superseded [[diskRound]] frames —
-    * the disk twin of [[releaseCheckpoint]]. Only paths under this
-    * session's scratch root are ever touched (a caller accidentally
+  /** Delete the scratch files behind superseded [[diskRound]] frames
+    * (a [[RoundSink]] calls this for its own chain). Only paths under
+    * this session's scratch root are ever touched (a caller accidentally
     * passing a real table is a no-op), and a SHORT drain runs first so
     * no straggling async-exchange task is mid-read when the file
     * vanishes (a re-read retry after that would FileNotFound — the one
-    * non-recomputable window this substrate has, closed the same way
-    * the block release was). Null frames are skipped so first-round
-    * callers can pass their not-yet-disk-backed seed frame. */
+    * non-recomputable window this substrate has, closed the way
+    * [[drainAndUnpersist]] closes it for cached blocks). Null frames are
+    * skipped. */
   def releaseDiskRound(spark: SparkSession, frames: DataFrame*): Unit = {
     val real = frames.filter(_ != null)
     if (real.isEmpty) return
@@ -345,38 +383,5 @@ private[graft] object Lifecycle {
     }
     if (emptyStreak < 2) drainTimeoutsAcc.incrementAndGet()
     drainNanosAcc.addAndGet(System.nanoTime() - t0)
-  }
-
-  /** Release the block-manager storage behind a superseded eagerly-
-    * localCheckpoint'ed frame (per-round state the next round has
-    * already been checkpointed FROM — nothing can legitimately read it
-    * again). Without this, an iters-round recurrence parks iters ×
-    * O(V) block sets until the ContextCleaner's next GC sweep — dead
-    * weight that at scale evicts live caches. Best-effort by design:
-    * drains first (a local-checkpoint block loss is NOT recomputable,
-    * so no straggler may be mid-read), and falls back to the
-    * ContextCleaner when the plan is not the expected checkpoint shape.
-    *
-    * The drain here is SHORT (250 ms, vs [[drainAndUnpersist]]'s 10 s):
-    * this runs once per LOOP ROUND of the iterative operators, and on a
-    * busy shared session whose tracker never empties a 10 s bounded
-    * wait per round would turn a seconds-scale N-round operator into
-    * minutes of idling. The long timeout stays reserved for the one
-    * final drain before the statics release. */
-  def releaseCheckpoint(spark: SparkSession, frames: DataFrame*): Unit = {
-    val real = frames.filter(_ != null)
-    if (real.isEmpty) return
-    drain(spark, timeoutMs = 250L)
-    real.foreach { df =>
-      // deliberately ONLY the root-is-checkpoint shape: traversing the
-      // tree for checkpoint LEAVES could release a caller-owned
-      // checkpoint that the initial round's frame still references
-      // (local-checkpoint loss is unrecoverable, not a recompute)
-      try df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
   }
 }

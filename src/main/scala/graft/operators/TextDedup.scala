@@ -344,8 +344,8 @@ object TextDedup {
     * C never collided directly. Iterative min-label propagation: every
     * node's component label drops to the smallest label among itself and
     * its neighbors, repeated to a fixpoint. One equi-join + one partial
-    * aggregate per round, labels disk-checkpointed per round
-    * ([[graft.operators.Lifecycle.diskRound]]) so the plan never
+    * aggregate per round, labels written per round through a
+    * [[graft.operators.Lifecycle.RoundSink]] so the plan never
     * accumulates lineage; rounds needed = component diameter, and
     * near-dup clusters are short chains in practice (`maxIter` guards the
     * pathological case — a loud error beats a silent wrong cluster).
@@ -375,7 +375,7 @@ object TextDedup {
     // one round: labels' comp drops to min over itself + neighbors; the
     // OLD label rides along so convergence is a filter over the already
     // materialized result, not another join. Each round's disk
-    // checkpoint truncates lineage; superseded rounds' scratch files
+    // write truncates lineage; superseded rounds' scratch files
     // are deleted as the loop advances, and the label set is
     // O(|docs in ≥1 pair|) — small next to the corpus — so peak scratch
     // across rounds stays modest.
@@ -396,18 +396,14 @@ object TextDedup {
     // filter+count action re-scanned every just-written round file
     val changedMetric = coalesce(sum(when(col("comp") =!= col("old"), 1L)
       .otherwise(0L)), lit(0L)).as("__changed")
+    // the sink deletes each superseded round; the returned frame is a
+    // view over the LAST round only, so the sink is never closed
     val sink = Lifecycle.roundSink(pairs.sparkSession)
     var iter = 0
     var converged = false
-    // `labels` is a lazy projection from round 1 on — track the actual
-    // checkpoint frame backing it so superseded rounds' blocks release
-    // (the returned frame is a view over the LAST round only)
-    var labelsCkpt: DataFrame = labels
     while (!converged && iter < maxIter) {
       val (next, m) = sink.roundObserved(propagateLazy(labels), changedMetric)
       converged = m("__changed").asInstanceOf[Number].longValue == 0L
-      Lifecycle.releaseDiskRound(pairs.sparkSession, labelsCkpt)
-      labelsCkpt = next
       labels = next.select("id", "comp")
       iter += 1
     }

@@ -38,8 +38,12 @@ object FsUtil {
     * write's `_temporary/...`) don't count — the reader ignores them, so
     * treating them as data would fail schema inference on read. */
   def hasData(spark: SparkSession, path: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val raw = new org.apache.hadoop.fs.Path(path)
+    val fs = raw.getFileSystem(spark.sessionState.newHadoopConf())
+    // listed files come back qualified (`file:/…`); the ancestor walk
+    // below must stop at the SAME form of the root, or it climbs past
+    // it and a '_'/'.'-prefixed directory above the table hides all data
+    val root = fs.makeQualified(raw)
 
     // Spark's own hidden-path rule (HadoopFsUtils): '_'/'.' prefixes are
     // hidden EXCEPT names containing '=' — partition directories like
@@ -49,7 +53,7 @@ object FsUtil {
 
     def hiddenAncestor(p: org.apache.hadoop.fs.Path): Boolean = {
       var cur = p.getParent
-      while (cur != null && cur != root && cur.toUri != root.toUri) {
+      while (cur != null && cur != root) {
         if (hidden(cur.getName)) return true
         cur = cur.getParent
       }

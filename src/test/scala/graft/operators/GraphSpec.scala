@@ -28,22 +28,39 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("lineage-cut cadence is semantics-free: per-round cuts match the composed default") {
-    // round 14: rounds compose lazily and materialize every
+    // rounds compose lazily and the round sink writes one every
     // spark.graft.round.cutEvery rounds — the cadence must never change
-    // a single rank bit. 7 iterations on an asymmetric graph crosses a
-    // mid-loop cut boundary at cutEvery=4 and stays fully composed at
-    // the default 8.
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 4L))
-    def withCut(k: String): Map[Long, Long] = {
+    // a single output bit. 9 iterations on an asymmetric graph: cut
+    // every round (1), mid-loop cuts (4: rounds 4 and 8), the default
+    // (8: one mid-loop cut) and fully composed (9: only the final
+    // write) must all agree, for every operator on the shared loop.
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 1L), (2L, 4L))
+    val edges = e.toDF("src", "dst")
+    val weighted = e.zipWithIndex.map { case ((s, d), i) => (s, d, i + 1L) }
+      .toDF("src", "dst", "weight")
+    val seeds = Seq(2L).toDF("node")
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ops: Seq[(String, () => Map[Long, Long])] = Seq(
+      "pagerankMicro" -> (() => rows(Graph.pagerankMicro(edges, 9))),
+      "weightedPagerankMicro" ->
+        (() => rows(Graph.weightedPagerankMicro(weighted, 9))),
+      "personalizedPagerankMicro" ->
+        (() => rows(Graph.personalizedPagerankMicro(edges, seeds, 9))),
+      "labelPropagation" -> (() => rows(Graph.labelPropagation(edges, 9))))
+    def withCut(k: String)(run: () => Map[Long, Long]): Map[Long, Long] = {
       spark.conf.set("spark.graft.round.cutEvery", k)
-      try ranksOf(edges, 7)
+      try run()
       finally spark.conf.unset("spark.graft.round.cutEvery")
     }
-    val perRound = withCut("1")
-    val midCut = withCut("4")
-    val composed = ranksOf(edges, 7) // default 8: one final cut only
-    assert(perRound === composed, "per-round vs fully-composed ranks differ")
-    assert(midCut === composed, "mid-loop cut vs fully-composed ranks differ")
+    ops.foreach { case (name, run) =>
+      val composed = withCut("9")(run)
+      assert(composed.size === 4, s"$name lost vertices")
+      Seq("1", "4").foreach { k =>
+        assert(withCut(k)(run) === composed, s"$name: cutEvery=$k vs fully composed")
+      }
+      assert(run() === composed, s"$name: default cadence vs fully composed")
+    }
   }
 
   test("symmetric vertices get identical ranks after several iterations") {

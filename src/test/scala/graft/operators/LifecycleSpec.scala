@@ -6,11 +6,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The disk-backed per-round state substrate (round 13): diskRound
-  * must round-trip values/schema through recomputable parquet scratch,
+/** The disk-backed per-round state substrate: diskRound must
+  * round-trip values/schema through recomputable parquet scratch,
   * releaseDiskRound must delete superseded rounds' files and NOTHING
-  * else, and the iterative chain pattern every Graph/Fusion/Survival
-  * loop uses must leave only the final round on disk. */
+  * else, a RoundSink must own its chain's cadence and deletion, and each
+  * iterative loop shape must leave on disk exactly the rounds its
+  * result reads. */
 class LifecycleSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = graft.SharedSpark.spark
@@ -103,7 +104,7 @@ class LifecycleSpec extends AnyFunSuite {
       "after measuring KB-scale bytes, later rounds are one file")
     // values survive the coalesced write
     assert(r2.agg(sum(col("x"))).head().getLong(0) === (0 until 200).map(_ * 2L).sum)
-    Lifecycle.releaseDiskRound(spark, r1, r2)
+    sink.close()
   }
 
   test("releaseDeferred unpersists registered caches after a drain") {
@@ -121,18 +122,94 @@ class LifecycleSpec extends AnyFunSuite {
 
   test("the iterative chain pattern leaves only the final round on disk") {
     import spark.implicits._
+    val sink = Lifecycle.roundSink(spark)
     var state = Seq((1L, 0L), (2L, 0L)).toDF("id", "x")
     var paths = Seq.empty[Path]
     (1 to 3).foreach { i =>
-      val next = Lifecycle.diskRound(state.withColumn("x", col("x") + i))
-      Lifecycle.releaseDiskRound(spark, state)
+      state = sink.round(state.withColumn("x", col("x") + i))
       assert(paths.forall(!exists(_)), s"round ${i - 1} files survived")
-      paths = scratchPaths(next)
-      state = next
+      paths = scratchPaths(state)
+      assert(paths.nonEmpty && paths.forall(exists), s"round $i not on disk")
     }
-    assert(paths.forall(exists), "final round must stay readable")
     // the recurrence value is correct through the chain: 0+1+2+3 = 6
     assert(state.orderBy("id").collect().map(_.getLong(1)).toSeq
       === Seq(6L, 6L))
+    sink.close()
+    assert(paths.forall(!exists(_)), "close left the last round on disk")
+  }
+
+  test("RoundSink.cut writes on the cadence only; keep = 2 holds two chains") {
+    import spark.implicits._
+    spark.conf.set("spark.graft.round.cutEvery", "3")
+    val sink =
+      try Lifecycle.roundSink(spark, keep = 2)
+      finally spark.conf.unset("spark.graft.round.cutEvery")
+    val rounds = (1 to 6).map(i => sink.cut(i, Seq(i.toLong).toDF("v")))
+    val written = rounds.map(scratchPaths(_).nonEmpty)
+    assert(written === Seq(false, false, true, false, false, true))
+    // keep = 2: after a third write, only the oldest is gone
+    val third = sink.round(Seq(7L).toDF("v"))
+    assert(scratchPaths(rounds(2)).forall(!exists(_)))
+    assert((scratchPaths(rounds(5)) ++ scratchPaths(third)).forall(exists))
+    sink.close()
+    assert((scratchPaths(rounds(5)) ++ scratchPaths(third)).forall(!exists(_)))
+  }
+
+  // The scratch root, found from a throwaway round's parent directory.
+  private lazy val scratchRoot: Path = {
+    import spark.implicits._
+    val probe = Lifecycle.diskRound(Seq(0L).toDF("v"))
+    val root = scratchPaths(probe).head.getParent
+    Lifecycle.releaseDiskRound(spark, probe)
+    root
+  }
+
+  private def roundsOnDisk(): Set[String] = {
+    val fs = scratchRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(scratchRoot).map(_.getPath.getName).toSet
+  }
+
+  /** Run an operator and assert the scratch rounds it leaves behind are
+    * exactly the rounds its returned frame reads; returns how many. */
+  private def leavesExactlyWhatItReads(run: => DataFrame): Int = {
+    val before = roundsOnDisk()
+    val out = run
+    val left = roundsOnDisk() -- before
+    val read = scratchPaths(out).map(_.getName).toSet
+    assert(left === read, s"scratch holds $left, the result reads $read")
+    assert(out.count() > 0L)
+    read.size
+  }
+
+  private def pairs(e: Seq[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    e.toDF("src", "dst")
+  }
+
+  test("pagerankMicro at cutEvery=2 leaves only its output round") {
+    val e = pairs(Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)))
+    spark.conf.set("spark.graft.round.cutEvery", "2")
+    try assert(leavesExactlyWhatItReads(Graph.pagerankMicro(e, 5)) === 1)
+    finally spark.conf.unset("spark.graft.round.cutEvery")
+  }
+
+  test("kCorePeel leaves only the last round, which its result reads") {
+    // a 4-clique with a 3-node tail: the tail peels over several rounds
+    val e = pairs(Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L)))
+    assert(leavesExactlyWhatItReads(Graph.kCorePeel(e, 3, 5)) === 1)
+  }
+
+  test("connectedComponentsStar leaves its input round and last round") {
+    import spark.implicits._
+    val p = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("id_a", "id_b")
+    assert(leavesExactlyWhatItReads(Graph.connectedComponentsStar(p)) === 2)
+  }
+
+  test("reachProfileKmv keeps every hop's round; hitsMicro keeps none") {
+    val e = pairs(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
+    assert(leavesExactlyWhatItReads(
+      Graph.reachProfileKmv(e, k = 8, maxHops = 3)) === 3)
+    assert(leavesExactlyWhatItReads(Graph.hitsMicro(e, 2)) === 0)
   }
 }

@@ -87,6 +87,26 @@ class StoreSpec extends AnyFunSuite {
     assert(back === Seq((1L, 22.0), (2L, 23.0), (1L, 99.0), (3L, 30.0)))
   }
 
+  test("a store under a '_'-prefixed directory keeps other rows of a merged date") {
+    // FsUtil.hasData once compared qualified file paths against the
+    // unqualified root, walked past it, and took the hidden ancestor
+    // for a hidden table: every merge then overwrote the touched date
+    // with the batch alone
+    val parent = java.nio.file.Files.createTempDirectory("_graft_hidden")
+    val dir = parent.resolve("fact").toString // plain path, no scheme
+    Store.mergeFactLastWins(Seq(
+      (1L, ts("2025-11-26 04:00:00"), 22.0),
+      (2L, ts("2025-11-26 05:00:00"), 23.0)).toDF("city_id", "dt", "temp"),
+      dir, keys)
+    assert(graft.sources.FsUtil.hasData(spark, dir))
+    Store.mergeFactLastWins(Seq(
+      (1L, ts("2025-11-26 04:00:00"), 99.0)).toDF("city_id", "dt", "temp"),
+      dir, keys)
+    val back = Store.readFact(spark, dir).orderBy("dt", "city_id")
+      .select("city_id", "temp").as[(Long, Double)].collect().toSeq
+    assert(back === Seq((1L, 99.0), (2L, 23.0)))
+  }
+
   test("prunedFact reads only the requested partitions' files") {
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
     val rows = Seq(
