@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-run counters captured around each timed query execution, so a
   * bench artifact from ANY box is self-diagnosing: a slow iteration
   * with high `gcMs` is memory pressure, with `stageRetry`/`taskFail`
@@ -111,7 +109,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     require(iters >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $iters")
     // SPARK_GRAFT_BENCH_ADVERSE=1: pin ~40% of the max heap as
@@ -132,25 +129,8 @@ object Bench {
       System.err.println(s"[bench] ADVERSE mode: pinned ${nChunks * 8} MiB " +
         s"of ${Runtime.getRuntime.maxMemory() >> 20} MiB max heap")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // favor fewer, fuller post-shuffle partitions over max parallelism:
-      // at bench scale the fixed task-scheduling overhead dominates
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536") // see GraftSession: hash-based sketch partials, bounded map memory
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bound dead-block accumulation across the 308-query sweep (see
-      // GraftSession: ContextCleaner frees blocks only after driver GC)
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      // graft SQL functions, as-of join, MERGE INTO lowering
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.getOrCreate("graft-bench")
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -176,26 +156,18 @@ object Bench {
       s
     }
 
-    // Time the raw operator (Probe.benchRun) where the gate query wraps
-    // it in a self-oracle audit — the audit's bounded exact-truth pass
-    // would otherwise dominate and mask operator regressions.
-    val benchBodies: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      graft.queries.Probes.all.map(p => p.name -> p.benchRun.getOrElse(p.run)).toMap
-
     def exec(name: String): RunStats = {
-      // measurement validity (round 14): operators that persist a frame
-      // the returned plan reads lazily (globalRank) register it for
-      // deferred release — free those caches, then clear ANY remaining
-      // SQL-cache entry, so no timed run can substitute a previous
-      // run's InMemoryTableScan for its own computation (the round-13
-      // "Asked to cache already cached data" warm-cache contamination).
-      // Runs before the timer starts: cleanup cost is never timed.
-      graft.operators.Lifecycle.releaseDeferred(spark)
-      spark.catalog.clearCache()
+      // Time the raw operator where the gate query wraps it in a
+      // self-oracle audit — the audit's bounded exact-truth pass would
+      // otherwise dominate and mask operator regressions.
+      val body = graft.queries.Probes.benchBody(name)
+      // measurement validity: no timed run may read a previous run's
+      // caches; cleanup runs before the timer starts and is never timed
+      GraftSession.resetQueryState(spark)
       telemetry.snapshotAndReset() // drop whatever bled in between queries
       graft.operators.Lifecycle.substrateStatsSnapshot()
       val gc0 = jvmGcMs
-      val sec = time(benchBodies(name)(spark, sfDir)
+      val sec = time(body(spark, sfDir)
         .write.format("noop").mode("overwrite").save())
       val (dMs, dTo, wMs, nR) =
         graft.operators.Lifecycle.substrateStatsSnapshot()
@@ -327,7 +299,7 @@ object Bench {
     val retryTotal = allRuns.map(_.c.stageRetry).sum
     val fullLine =
       s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
-        s""""iters":$iters,"n_queries":${medians.size},""" +
+        s""""iters":$iters,"cpus":$cpus,"n_queries":${medians.size},""" +
         s""""adverse":$adverse,"n_over_budget":$nOverBudget,""" +
         s""""gc_total_ms":$gcTotalMs,"task_fail_total":$failTotal,""" +
         s""""stage_retry_total":$retryTotal,""" +
@@ -348,7 +320,7 @@ object Bench {
       .mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
-        s""""iters":$iters,"n_queries":${medians.size},""" +
+        s""""iters":$iters,"cpus":$cpus,"n_queries":${medians.size},""" +
         s""""adverse":$adverse,""" +
         s""""n_failed":${failed.size},"n_over_budget":$nOverBudget,""" +
         s""""gc_total_ms":$gcTotalMs,"task_fail_total":$failTotal,""" +

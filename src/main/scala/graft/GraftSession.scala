@@ -2,57 +2,76 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard tuning.
+/** The engine's single session factory and per-query run protocol.
   *
-  * Designed for local[N] testing but with settings that translate to a real
-  * cluster: AQE on (runtime re-plan, skew-join handling, shuffle-partition
-  * coalescing), shuffle partitions sized to the parallelism rather than the
-  * 200 default, and a pinned UTC session timezone so results are
-  * reproducible against any oracle engine.
+  * Every session the drivers (Bench, Verify, IngestMain), the dev tools
+  * and the test suites open is configured here, so the conf the oracle
+  * gate checks is the conf the bench times. Core count is the only thing
+  * a caller varies: it sets `local[N]` and the shuffle partition count.
+  *
+  * Only settings that differ from Spark's defaults are listed. AQE
+  * (runtime re-plan, skew-join handling, post-shuffle coalescing with
+  * parallelism first at a 64 MiB advisory size) runs at Spark's defaults,
+  * which GraftSessionSpec pins so an upgrade cannot flip them silently.
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  def builder(appName: String = "graft"): SparkSession.Builder =
+  /** Cluster width: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** Every setting the factory makes beyond master and shuffle partitions. */
+  val settings: Map[String, String] = Map(
+    // typed-Aggregator (udaf) partials run in ObjectHashAggregateExec,
+    // whose default sort-based fallback triggers at 128 distinct keys —
+    // far below any real group count, silently turning a hash partial
+    // into a full sort of the input stream. 64 Ki keys keeps every
+    // sketch/centroid aggregate hash-based at its actual group counts
+    // while bounding worst-case partial-map memory: 2^16 keys × ~2 KiB
+    // buffer (k=256-long bottom-k, the largest shipped) ≈ 128 MiB per
+    // task — safe headroom, where the previous 2^20 admitted ~2 GiB
+    // before the graceful sort fallback could engage
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+    // results reproducible against any oracle engine
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // Long sessions (a full bench/verify sweep) accumulate dead
+    // cached/checkpointed blocks: the ContextCleaner only frees a
+    // block once the driver GC collects the RDD handle, and a large,
+    // mostly-idle driver heap can go tens of minutes between full
+    // GCs — in local mode driver and executor share that heap, so
+    // storage memory silently fills with garbage blocks and live
+    // caches start evicting/spilling (the measured 3× run-to-run
+    // spread on the graph tier). Spark's own knob for exactly this
+    // ships at 30min; 90s bounds the garbage window to roughly one
+    // query. On a real cluster this stays harmless: a periodic
+    // System.gc() on an idle driver heap is microseconds.
+    "spark.cleaner.periodicGC.interval" -> "90s",
+    // graft SQL functions, as-of join, MERGE INTO lowering (graft.plans.SqlMerge)
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions")
+
+  def builder(appName: String = "graft",
+              cpus: Int = GraftSession.cpus): SparkSession.Builder =
     SparkSession
       .builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // typed-Aggregator (udaf) partials run in ObjectHashAggregateExec,
-      // whose default sort-based fallback triggers at 128 distinct keys —
-      // far below any real group count, silently turning a hash partial
-      // into a full sort of the input stream. 64 Ki keys keeps every
-      // sketch/centroid aggregate hash-based at its actual group counts
-      // while bounding worst-case partial-map memory: 2^16 keys × ~2 KiB
-      // buffer (k=256-long bottom-k, the largest shipped) ≈ 128 MiB per
-      // task — safe headroom, where the previous 2^20 admitted ~2 GiB
-      // before the graceful sort fallback could engage
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Long sessions (a 308-query bench/verify sweep) accumulate dead
-      // cached/checkpointed blocks: the ContextCleaner only frees a
-      // block once the driver GC collects the RDD handle, and a large,
-      // mostly-idle driver heap can go tens of minutes between full
-      // GCs — in local mode driver and executor share that heap, so
-      // storage memory silently fills with garbage blocks and live
-      // caches start evicting/spilling (the measured 3× run-to-run
-      // spread on the graph tier). Spark's own knob for exactly this
-      // ships at 30min; 90s bounds the garbage window to roughly one
-      // query. On a real cluster this stays harmless: a periodic
-      // System.gc() on an idle driver heap is microseconds.
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      // SQL MERGE INTO over graft MergeSink temp views (graft.plans.SqlMerge)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config(settings)
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Query-boundary reset, run between measured or verified queries:
+    * free the caches operators deferred past their call (globalRank),
+    * then any remaining SQL-cache entry, so no query substitutes an
+    * earlier query's InMemoryTableScan for its own computation or runs
+    * against the storage footprint earlier queries left behind. */
+  def resetQueryState(spark: SparkSession): Unit = {
+    graft.operators.Lifecycle.releaseDeferred(spark)
+    spark.catalog.clearCache()
   }
 }

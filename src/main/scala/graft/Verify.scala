@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Provenance stamp for a verify dump: git SHA + query list, so a gate
@@ -25,18 +24,7 @@ object VerifyMeta {
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536") // see GraftSession: hash-based sketch partials, bounded map memory
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // graft SQL functions, as-of join, MERGE INTO lowering
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name filter for fast local iteration;
     // absent (the driver's invocation) → all queries, unchanged contract
@@ -53,12 +41,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // bound session state across the 319-query sweep: free deferred
-      // caches (globalRank) and any stray SQL-cache entry so late
-      // queries never run against a storage-memory footprint earlier
-      // queries accumulated (the r13 late-sweep blowup signature)
-      graft.operators.Lifecycle.releaseDeferred(spark)
-      spark.catalog.clearCache()
+      GraftSession.resetQueryState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

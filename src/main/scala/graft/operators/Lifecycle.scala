@@ -141,7 +141,7 @@ private[graft] object Lifecycle {
     * block manager state is load-bearing for the next round.
     *
     * Write machinery is kept deliberately bare (measured on the
-    * pagerank-round-shaped producer, tools/RoundVariants): no REBALANCE
+    * pagerank-round-shaped producer, OPTIMIZATION_r13.md §3): no REBALANCE
     * (an extra AQE shuffle stage per round), no _SUCCESS marker, no
     * parquet summary files — this is session-scoped scratch nobody
     * discovers by directory listing. Scratch stays SNAPPY regardless of

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * // or, on a session builder outside graft.GraftSession (which sets the conf)
+  * builder.withExtensions(new GraftExtensions) ...
   * }}}
   *
   * The same functions are also registerable per-session through

@@ -12691,4 +12691,13 @@ object Probes {
   )
 
   def all: Seq[Probe] = relationalProbes ++ extensionProbes
+
+  /** The body Bench times for probe `name`: its raw operator (`benchRun`)
+    * where the gate query wraps one in a self-oracle audit, else the gate
+    * query itself. */
+  def benchBody(name: String): (SparkSession, String) => DataFrame = {
+    val p = all.find(_.name == name)
+      .getOrElse(sys.error(s"unknown probe: $name"))
+    p.benchRun.getOrElse(p.run)
+  }
 }

@@ -2,31 +2,18 @@ package graft.tools
 
 object BenchOne {
   def main(a: Array[String]): Unit = {
-    // SPARK_GRAFT_BENCHCONF=1 reproduces graft.Bench's session exactly
-    // (aggressive AQE coalescing: parallelismFirst=false + 64m advisory)
-    // so session-vs-warm gaps can be bisected to conf, not code
-    val b = graft.GraftSession.builder("benchone")
-    if (sys.env.get("SPARK_GRAFT_BENCHCONF").contains("1")) {
-      b.config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      b.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-    }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("benchone")
     val d = "/root/testdata/sf0.1"
     for (n <- a) {
-      // "bench:<name>" times the operator path (benchRun) the way
-      // graft.Bench does; a bare name times the gate query (run)
-      val (label, fn) =
-        if (n.startsWith("bench:")) {
-          val name = n.stripPrefix("bench:")
-          val p = graft.queries.Probes.all.find(_.name == name)
-            .getOrElse(sys.error(s"unknown probe: $name"))
-          (n, p.benchRun.getOrElse(p.run))
-        } else (n, graft.SparkEntry.queries(n))
+      // "bench:<name>" times the operator path the way graft.Bench does;
+      // a bare name times the gate query (run)
+      val fn =
+        if (n.startsWith("bench:"))
+          graft.queries.Probes.benchBody(n.stripPrefix("bench:"))
+        else graft.SparkEntry.queries(n)
       val t0 = System.nanoTime()
       fn(spark, d).write.format("noop").mode("overwrite").save()
-      println(f"TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"TIMING $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()
   }

@@ -8,11 +8,10 @@ import org.apache.spark.sql.SparkSession
   * at 32 because the per-round write fixed cost scaled with core
   * count; nothing in-repo would have caught it).
   *
-  * Runs each named query (benchRun where defined — the same body the
-  * driver times) in TWO fresh sessions, local[hi] then local[lo], with
-  * the bench's exact conf (shuffle partitions = cores, AQE advisory
-  * 64m, parallelismFirst=false), one untimed warm-up + median of 3
-  * timed noop-sink runs each, and prints `lo_sec / hi_sec` per query.
+  * Runs each named query (the body the bench times) in TWO fresh
+  * GraftSession sessions, local[hi] then local[lo], one untimed warm-up
+  * + median of 3 timed noop-sink runs each, and prints `lo_sec / hi_sec`
+  * per query.
   *
   * READ: ratio ≈ 1 means the query is fixed-cost-bound at this SF
   * (fine); ratio noticeably ABOVE 1 means more cores help (fine);
@@ -25,38 +24,20 @@ import org.apache.spark.sql.SparkSession
 object CoreRatio {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val hi = args.lift(1).getOrElse("32")
-    val lo = args.lift(2).getOrElse("8")
+    val hi = args.lift(1).fold(32)(_.toInt)
+    val lo = args.lift(2).fold(8)(_.toInt)
     val names = args.drop(3).toSeq
     require(names.nonEmpty, "pass query names (e.g. q78_pagerank)")
 
-    def session(cpus: String): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName(s"core-ratio-$cpus")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.cleaner.periodicGC.interval", "90s")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    def timeAt(cpus: Int): Map[String, Double] = {
+      val spark = graft.GraftSession.builder(s"core-ratio-$cpus", cpus)
         .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-
-    def timeAt(cpus: String): Map[String, Double] = {
-      val spark = session(cpus)
-      val bodies = graft.queries.Probes.all
-        .map(p => p.name -> p.benchRun.getOrElse(p.run)).toMap
+      spark.sparkContext.setLogLevel("WARN")
       def once(n: String): Double = {
-        graft.operators.Lifecycle.releaseDeferred(spark)
-        spark.catalog.clearCache()
+        val body = graft.queries.Probes.benchBody(n)
+        graft.GraftSession.resetQueryState(spark)
         val t0 = System.nanoTime()
-        bodies(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        body(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       val out = names.map { n =>

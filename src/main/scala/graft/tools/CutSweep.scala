@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Round-14 measurement harness for the iterative-graph recovery: times
-  * named probes' benchRun bodies under the exact Bench session conf at
+  * named probes' bench bodies in the GraftSession session at
   * several `spark.graft.round.cutEvery` settings (1 = eager round
   * writes, big = fully composed), with per-run job counts and summed
   * job wall so the fixed-cost structure (many small jobs vs one deep
@@ -39,30 +39,14 @@ object CutSweep {
     val (names, cuts0) = a.span(_ != "--")
     val cuts =
       if (cuts0.length <= 1) Seq(1, 2, 8) else cuts0.drop(1).map(_.toInt).toSeq
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("cutsweep")
     val clock = new JobClock
     spark.sparkContext.addSparkListener(clock)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (n <- names) {
-      val p = graft.queries.Probes.all.find(_.name == n)
-        .getOrElse(sys.error(s"unknown probe: $n"))
-      val body = p.benchRun.getOrElse(p.run)
+      val body = graft.queries.Probes.benchBody(n)
       // one untimed warm-up per probe (codegen, footer cache), as Bench does
-      graft.operators.Lifecycle.releaseDeferred(spark)
-      spark.catalog.clearCache()
+      graft.GraftSession.resetQueryState(spark)
       body(spark, d).write.format("noop").mode("overwrite").save()
       for (c <- cuts) {
         // negative cut value ⇒ same |c| but with AQE disabled for the
@@ -71,8 +55,7 @@ object CutSweep {
         spark.conf.set("spark.sql.adaptive.enabled", (c > 0).toString)
         spark.conf.set("spark.graft.round.cutEvery", math.abs(c).toString)
         val runs = (1 to 3).map { _ =>
-          graft.operators.Lifecycle.releaseDeferred(spark)
-          spark.catalog.clearCache()
+          graft.GraftSession.resetQueryState(spark)
           graft.operators.Lifecycle.substrateStatsSnapshot()
           clock.reset()
           val t0 = System.nanoTime()

@@ -6,11 +6,9 @@ object Explain {
     val d = "/root/testdata/sf0.001"
     for (n <- a) {
       println(s"========== $n ==========")
-      // dump the operator path (benchRun) where the gate query wraps it
-      // in a self-oracle audit — plan evidence is about what users run
-      val p = graft.queries.Probes.all.find(_.name == n)
-        .getOrElse(sys.error(s"unknown probe: $n"))
-      p.benchRun.getOrElse(p.run)(spark, d).explain("formatted")
+      // dump the operator path Bench times — plan evidence is about
+      // what users run, not the gate query's self-oracle audit
+      graft.queries.Probes.benchBody(n)(spark, d).explain("formatted")
     }
     spark.stop()
   }

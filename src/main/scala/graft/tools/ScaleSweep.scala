@@ -1299,7 +1299,7 @@ object ScaleSweep {
       // drop this rep's persisted frames (pagerank edges etc.) so the
       // next, larger rep isn't measured under the previous rep's cache
       // pressure
-      spark.catalog.clearCache()
+      graft.GraftSession.resetQueryState(spark)
     }
     spark.stop()
   }

@@ -3,21 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole test JVM (suites share it — per-suite
-  * sessions would pay JVM+context startup repeatedly). */
+  * sessions would pay JVM+context startup repeatedly), built by the same
+  * factory as every production session, at four cores. */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // see GraftSession: keep typed-Aggregator partials hash-based
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "65536") // see GraftSession: hash-based sketch partials, bounded map memory
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // production sessions (GraftSession, Verify, Bench) run with the
-    // graft extensions; tests should exercise the same analyzer —
-    // needed by the SQL MERGE INTO probes
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession.builder("graft-test", cpus = 4).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
   def sf0001 = "/root/testdata/sf0.001"
 }

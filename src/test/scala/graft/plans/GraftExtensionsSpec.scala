@@ -11,7 +11,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("extensions-injected functions resolve in a fresh session") {
     // withExtensions applies only when getOrCreate builds a NEW session —
     // clear default/active so it doesn't return the shared test session.
-    // The underlying SparkContext (if any) is reused and never stopped.
+    // The shared session is built first so the JVM's one SparkContext
+    // carries the factory's conf whichever suite runs first; it is
+    // reused here and never stopped.
+    graft.SharedSpark.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession.builder()

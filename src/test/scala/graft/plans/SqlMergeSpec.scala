@@ -13,21 +13,9 @@ import graft.weather.Store.{ParquetDateSink, ParquetSnapshotSink}
   * driven from `spark.sql`, plus the general conditional-action shapes. */
 class SqlMergeSpec extends AnyFunSuite {
 
-  // merge lowering needs the injected analyzer rules — a dedicated
-  // session (newSession of the shared one would share extensions state;
-  // building with the full GraftExtensions mirrors production)
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sqlmerge-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // merge lowering needs the injected analyzer rules, which the shared
+  // session carries like every GraftSession-built session
+  private lazy val spark: SparkSession = graft.SharedSpark.spark
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath

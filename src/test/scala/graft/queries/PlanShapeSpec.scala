@@ -11,14 +11,13 @@ import graft.SharedSpark
 class PlanShapeSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
 
-  /** Plan of the probe's OPERATOR path: benchRun when defined (the
+  /** Plan of the probe's OPERATOR path, the body Bench times (the
     * self-oracled probes wrap the operator in an audit whose bounded
     * exact-truth pass deliberately cross-joins scalar aggregates — the
-    * shape guard is about the operator users run), else the gate query. */
+    * shape guard is about the operator users run). */
   def planOf(name: String): String = {
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    val p = Probes.all.find(_.name == name).get
-    p.benchRun.getOrElse(p.run)(spark, SharedSpark.sf0001)
+    Probes.benchBody(name)(spark, SharedSpark.sf0001)
       .queryExecution.executedPlan.toString
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GraftExtensions, SqlMerge}
+import graft.plans.SqlMerge
 import graft.sources.DeltaLake.DeltaDateSink
 import graft.sources.TxnParquet.TxnParquetSink
 
@@ -16,18 +16,7 @@ import graft.sources.TxnParquet.TxnParquetSink
   * unsupported-feature failure modes. */
 class DeltaLakeSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-deltalake-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark: SparkSession = graft.SharedSpark.spark
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
