@@ -77,6 +77,12 @@ private final class BenchTelemetry extends org.apache.spark.scheduler.SparkListe
   * (per-run wall times, whole-JVM GC ms, task failures, stage
   * retries, block removals, spill — see [[BenchTelemetry]]) so an
   * anomalous iteration names its cause in the artifact itself.
+  * The warm-up absorbs codegen only because the session's codegen
+  * cache (sized in [[GraftSession.settings]]) holds every class the
+  * query compiles. Each run records its janino compiles, so a cache
+  * that thrashes again, or a plan that inlines a literal that changes
+  * per run, shows as non-zero `codegen_compiles` in the timed runs
+  * instead of a vague slowdown.
   * q40 (IVF ANN) additionally reports its two phases split:
   * k-means training (flat cost — fit on a bounded sample) vs search
   * (the part that scales with corpus size).
@@ -102,10 +108,11 @@ object Bench {
   /** One timed execution: wall seconds (−1 on failure), whole-JVM GC
     * ms during the run (local mode: driver + executors are ONE JVM, so
     * the MX-bean delta is the true process GC cost; `c.taskGcMs` is
-    * the per-task attribution a real cluster would report), and the
-    * listener counters. */
-  case class RunStats(sec: Double, gcMs: Long, c: RunCounters,
-                      s: SubstrateStats)
+    * the per-task attribution a real cluster would report), generated
+    * classes compiled during the run (JVM-wide, like the GC ms), and
+    * the listener counters. */
+  case class RunStats(sec: Double, gcMs: Long, compiles: Long,
+                      c: RunCounters, s: SubstrateStats)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -155,6 +162,8 @@ object Bench {
       while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) s += t }
       s
     }
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     def exec(name: String): RunStats = {
       // Time the raw operator where the gate query wraps it in a
@@ -166,13 +175,14 @@ object Bench {
       GraftSession.resetQueryState(spark)
       telemetry.snapshotAndReset() // drop whatever bled in between queries
       graft.operators.Lifecycle.substrateStatsSnapshot()
+      val compiles0 = compiles
       val gc0 = jvmGcMs
       val sec = time(body(spark, sfDir)
         .write.format("noop").mode("overwrite").save())
       val (dMs, dTo, wMs, nR) =
         graft.operators.Lifecycle.substrateStatsSnapshot()
-      RunStats(sec, jvmGcMs - gc0, telemetry.snapshotAndReset(),
-        SubstrateStats(dMs, dTo, wMs, nR))
+      RunStats(sec, jvmGcMs - gc0, compiles - compiles0,
+        telemetry.snapshotAndReset(), SubstrateStats(dMs, dTo, wMs, nR))
     }
 
     def median(xs: Seq[Double]): Double = {
@@ -270,8 +280,9 @@ object Bench {
       "\"" + k + "\":" + sec(v)
     }.mkString("{", ",", "}")
     // Per-run telemetry block: for EVERY query, each timed run's wall
-    // seconds, whole-JVM GC ms, task failures, stage retries, block
-    // removals, spill MiB, and task count (arrays aligned run-by-run),
+    // seconds, whole-JVM GC ms, codegen compiles, task failures, stage
+    // retries, block removals, spill MiB, and task count (arrays aligned
+    // run-by-run),
     // plus the untimed warm-up pass — the self-diagnosis the flap
     // rounds lacked. A query over budget here now SHOWS whether the
     // bad iteration burned GC, retried stages, lost blocks, spilled,
@@ -281,8 +292,10 @@ object Bench {
     val telemetryFull = stats.map { case (n, (warm, runs)) =>
       "\"" + n + "\":{" +
         s""""warm_sec":${sec(warm.sec)},"warm_gc_ms":${warm.gcMs},""" +
+        s""""warm_codegen_compiles":${warm.compiles},""" +
         s""""runs_sec":${jd(runs.map(_.sec))},""" +
         s""""gc_ms":${jl(runs.map(_.gcMs))},""" +
+        s""""codegen_compiles":${jl(runs.map(_.compiles))},""" +
         s""""task_fail":${jl(runs.map(_.c.taskFail))},""" +
         s""""stage_retry":${jl(runs.map(_.c.stageRetry))},""" +
         s""""blocks_removed":${jl(runs.map(_.c.blocksRemoved))},""" +
@@ -297,12 +310,15 @@ object Bench {
     val gcTotalMs = allRuns.map(_.gcMs).sum
     val failTotal = allRuns.map(_.c.taskFail).sum
     val retryTotal = allRuns.map(_.c.stageRetry).sum
+    val compilesTimedTotal =
+      stats.flatMap { case (_, (_, rs)) => rs }.map(_.compiles).sum
     val fullLine =
       s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
         s""""iters":$iters,"cpus":$cpus,"n_queries":${medians.size},""" +
         s""""adverse":$adverse,"n_over_budget":$nOverBudget,""" +
         s""""gc_total_ms":$gcTotalMs,"task_fail_total":$failTotal,""" +
         s""""stage_retry_total":$retryTotal,""" +
+        s""""codegen_compiles_timed_total":$compilesTimedTotal,""" +
         s""""over_budget":$overList,"queries":$qsFull,"spread":$spreadFull,""" +
         s""""telemetry":$telemetryFull,""" +
         s""""q40_split":{"train":${sec(q40Train)},"search":${sec(q40Search)}},""" +
@@ -325,6 +341,7 @@ object Bench {
         s""""n_failed":${failed.size},"n_over_budget":$nOverBudget,""" +
         s""""gc_total_ms":$gcTotalMs,"task_fail_total":$failTotal,""" +
         s""""stage_retry_total":$retryTotal,""" +
+        s""""codegen_compiles_timed_total":$compilesTimedTotal,""" +
         s""""queries":$qsCompact,""" +
         s""""q40_split":{"train":${sec(q40Train)},"search":${sec(q40Search)}},""" +
         s""""note":"queries = slowest 35 of ${medians.size}; full map+telemetry in BENCH_FULL.json",""" +

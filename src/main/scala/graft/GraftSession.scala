@@ -47,6 +47,21 @@ object GraftSession {
     // query. On a real cluster this stays harmless: a periodic
     // System.gc() on an idle driver heap is microseconds.
     "spark.cleaner.periodicGC.interval" -> "90s",
+    // Compiled generated classes live in one JVM-wide LRU cache,
+    // `CodeGenerator.cache`, sized from this key once: when the
+    // CodeGenerator object is first used. At Spark's 100 entries it
+    // thrashes. One pass of the iterative graph family (pagerank, PPR,
+    // label propagation, HITS, k-core) compiles 127 distinct classes,
+    // and the first hourly weather ingest + dashboard pass 116 new ones
+    // (perfbench, local[4]). Each pass uses its classes in the same
+    // cyclic order, so LRU evicts every class before its next use, and
+    // every warm pass recompiled 93 graph classes (76-104 weather) in
+    // janino. 1000 holds about 8x the largest working set measured; the
+    // larger cache raised perfbench's live-heap peak by 1-3 MiB. Because
+    // the size is fixed at first use, no codegen may run in a JVM before
+    // a factory session exists: GraftExtensionsSpec builds SharedSpark
+    // before its own session for this reason too.
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     // graft SQL functions, as-of join, MERGE INTO lowering (graft.plans.SqlMerge)
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 

@@ -1,5 +1,8 @@
 package graft
 
+import graft.operators.Graph
+import org.apache.commons.io.FileUtils
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,5 +33,34 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) === 64L << 20)
     assert(c.getConf(SQLConf.OBJECT_AGG_SORT_BASED_FALLBACK_THRESHOLD) === 65536)
     assert(c.getConf(SQLConf.SESSION_LOCAL_TIMEZONE) === "UTC")
+  }
+
+  test("a warm pass of the iterative graph family compiles no generated class") {
+    // The same operators as perfbench's graph_iterative pass, read from
+    // parquet like it. Their working set (127 classes with this suite
+    // run alone) outgrows Spark's default 100-entry codegen cache, and a
+    // pass that cycles through its classes in a fixed order then
+    // recompiles most of them every time; the factory's cache size must
+    // hold them all.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_codegen").toFile
+    try {
+      val n = 40L
+      (0L until n).flatMap(i => Seq(i -> (i + 1) % n, i -> (i * 7 + 3) % n))
+        .toDF("src", "dst").write.parquet(s"$dir/edges")
+      Seq(0L, 5L).toDF("node").write.parquet(s"$dir/seeds")
+      def compiles(): Long = {
+        val e = spark.read.parquet(s"$dir/edges")
+        val seeds = spark.read.parquet(s"$dir/seeds")
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        Seq(Graph.pagerankMicro(e, 2), Graph.personalizedPagerankMicro(e, seeds, 2),
+          Graph.labelPropagation(e, 2), Graph.hitsMicro(e, 2), Graph.kCorePeel(e, 3, 2))
+          .foreach(_.collect())
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      }
+      val cold = compiles()
+      GraftSession.resetQueryState(spark)
+      assert(compiles() === 0L, s"(the first pass compiled $cold)")
+    } finally FileUtils.deleteDirectory(dir)
   }
 }

@@ -12,8 +12,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // withExtensions applies only when getOrCreate builds a NEW session —
     // clear default/active so it doesn't return the shared test session.
     // The shared session is built first so the JVM's one SparkContext
-    // carries the factory's conf whichever suite runs first; it is
-    // reused here and never stopped.
+    // carries the factory's conf whichever suite runs first (including
+    // the JVM-wide codegen cache size, fixed at the first compile); it
+    // is reused here and never stopped.
     graft.SharedSpark.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
