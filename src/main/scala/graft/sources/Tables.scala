@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
   * Columnar parquet scans: Catalyst pushes predicates + prunes columns at
   * the scan, so callers should select/filter as early as possible and let
   * the optimizer do the rest. At 100 TB these become partitioned/ bucketed
-  * table scans; the API surface (DataFrame in/out) is unchanged.
+  * table scans; the API surface (DataFrame in/out) is unchanged. Loading
+  * runs no Spark job: the schema comes from a driver-side footer read
+  * ([[FsUtil.readParquet]]), not from Spark's one-task inference job.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    FsUtil.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

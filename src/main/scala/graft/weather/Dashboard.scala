@@ -9,8 +9,11 @@ import graft.operators.Relational
   * widgets' generated SQL re-expressed as parameterized DataFrame
   * programs. All take the fact (and dim where needed) as inputs plus
   * optional city/date filters (F3/F4); filters are plain Catalyst
-  * predicates so they push down to the parquet scan and prune date
-  * partitions.
+  * predicates, so they push down to the parquet scan as data filters
+  * (row-group statistics). They do NOT prune date partitions: the fact
+  * from [[Store.readFact]] has no `p_date` column, so the `dt` window
+  * never becomes a partition filter (`PartitionFilters: []` in the final
+  * plan) and every widget lists and opens every day's files.
   */
 object Dashboard {
 

@@ -1,6 +1,6 @@
 package graft.weather
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pure DataFrame→DataFrame flattening transforms for the weather ingest
@@ -31,7 +31,11 @@ object Flatten {
     parsed.filter(col("d.cod") === "200")
 
   def badRecords(parsed: DataFrame): DataFrame =
-    parsed.filter(col("d.cod").isNull || col("d.cod") =!= "200")
+    parsed.filter(!isOk)
+
+  /** The gate as a never-null predicate over a parsed row: true exactly
+    * for the rows `gateOk` keeps, false for the rows `badRecords` keeps. */
+  def isOk: Column = coalesce(col("d.cod") === "200", lit(false))
 
   /** P1/P2/P6 + X1: flatten one current-weather document to the wide
     * 24-column row (dim + fact attributes, epochs → UTC timestamps).

@@ -1,6 +1,7 @@
 package graft.weather
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, greatest, lit, size, sum, when}
 
 import graft.sources.MergeSink
 
@@ -82,24 +83,41 @@ object Ingest {
   def runCurrent(spark: SparkSession, source: PayloadSource,
                  citiesSink: MergeSink, factSink: MergeSink): IngestResult = {
     implicit val s: SparkSession = spark
-    // cache the PARSED payloads, not just the flattened rows: the ok and
-    // bad channels both derive from them, and with an HTTP source an
-    // uncached lineage would re-fetch every URL per downstream action —
-    // doubling quota use and making the two counts disagree under flaky
-    // endpoints
+    // cache the PARSED payloads: the counts, the bad channel and both
+    // merges derive from them, and with an HTTP source an uncached
+    // lineage would re-fetch every URL per downstream action — doubling
+    // quota use and making the channels disagree under flaky endpoints.
+    // The flattened rows are NOT cached: re-flattening a cached batch is
+    // cheaper than the extra job a second cache's build costs.
     val parsed = Flatten.parseCurrent(source.fetch(spark)).cache()
-    val wide = Flatten.flattenCurrent(parsed).cache()
-    val okCount = wide.count()
-    // bad records are few by the gate's nature — materialize them once
-    // (before releasing the cached source) and count the local copy, so
-    // neither the count nor later quarantine re-executes the fetch lineage
-    val bad = Flatten.badRecords(parsed).localCheckpoint(true)
-    val badCount = bad.count()
+    val (okCount, badCount, bad) = countAndQuarantine(parsed, lit(1))
+    val wide = Flatten.flattenCurrent(parsed)
 
     citiesSink.mergeLastWins(Flatten.citiesDim(wide), Seq("city_id"))
     factSink.mergeLastWins(Flatten.currentFact(wide), Seq("city_id", "dt"))
-    graft.operators.Lifecycle.drainAndUnpersist(spark, wide, parsed)
+    graft.operators.Lifecycle.drainAndUnpersist(spark, parsed)
     IngestResult(citiesSink.read(spark), factSink.read(spark), okCount, badCount, bad)
+  }
+
+  /** One aggregate over the cached parse gives both counts: `okRows` is
+    * the number of rows an ok document flattens to, and every other
+    * document counts one bad. Bad documents are few by the gate's nature
+    * and most batches have none, so `bad` is materialized (once, before
+    * the cached source is released, so quarantine never re-executes the
+    * fetch lineage) only when there is one; otherwise it is an empty
+    * frame with the parse's schema. */
+  private def countAndQuarantine(parsed: DataFrame, okRows: Column)
+      : (Long, Long, DataFrame) = {
+    val ok = Flatten.isOk
+    val counts = parsed.agg(
+      coalesce(sum(when(ok, okRows).otherwise(0)), lit(0L)),
+      coalesce(sum(when(ok, 0).otherwise(1)), lit(0L))).head()
+    val badCount = counts.getLong(1)
+    val bad =
+      if (badCount > 0) Flatten.badRecords(parsed).localCheckpoint(true)
+      else parsed.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[Row](), parsed.schema)
+    (counts.getLong(0), badCount, bad)
   }
 
   /** Forecast backfill (the notebook's §3.2 path): 40-entry fan-out per
@@ -117,14 +135,15 @@ object Ingest {
     implicit val s: SparkSession = spark
     // cached for the same single-fetch guarantee as runCurrent
     val parsed = Flatten.parseForecast(source.fetch(spark)).cache()
-    val wide = Flatten.flattenForecast(parsed).cache()
-    val okCount = wide.count()
-    val bad = Flatten.badRecords(parsed).localCheckpoint(true) // see runCurrent
-    val badCount = bad.count()
+    // an ok document flattens to one row per `list` entry (explode), so
+    // a null or empty list counts 0 (`size` of null is null or -1)
+    val (okCount, badCount, bad) =
+      countAndQuarantine(parsed, greatest(size(col("d.list")), lit(0)))
+    val wide = Flatten.flattenForecast(parsed)
 
     citiesSink.mergeLastWins(Flatten.citiesDim(wide), Seq("city_id"))
     factSink.mergeLastWins(Flatten.forecastFact(wide), Seq("city_id", "dt"))
-    graft.operators.Lifecycle.drainAndUnpersist(spark, wide, parsed)
+    graft.operators.Lifecycle.drainAndUnpersist(spark, parsed)
     IngestResult(citiesSink.read(spark), factSink.read(spark), okCount, badCount, bad)
   }
 }

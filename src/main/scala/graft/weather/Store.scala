@@ -1,7 +1,8 @@
 package graft.weather
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructField}
 
 import graft.operators.Relational
 import graft.sources.{FsUtil, MergeSink}
@@ -10,9 +11,16 @@ import graft.sources.{FsUtil, MergeSink}
   * policies (SURVEY.md §2.1 S4/S5, §2.4 J2/J3) without a transactional
   * table format — dedup-merge + partition overwrite (§7.4 risk 1).
   *
-  * Layout decisions (SURVEY.md §4): facts partitioned by `date(dt)` so the
-  * dashboard's date-range filters prune partitions; the cities dim is tiny
-  * and unpartitioned (always broadcast in J1).
+  * Layout decisions (SURVEY.md §4): facts partitioned by `date(dt)`, so
+  * a merge reads and rewrites only the days it touches; the cities dim is
+  * tiny and unpartitioned (always broadcast in J1). The dashboard's `dt`
+  * window does NOT prune those partitions: [[readFact]] drops `p_date`,
+  * so the window reaches the scan as data filters only
+  * (`PartitionFilters: []`) and every widget lists and opens every day.
+  *
+  * Every read of a stored table goes through [[FsUtil.parquetTable]]: the
+  * schema comes from one footer read on the driver, so a read launches
+  * no Spark job (`spark.read.parquet` runs a one-task inference job).
   *
   * Scale posture: every fact merge is INCREMENTAL — the batch's touched
   * `p_date` set is computed first, only those partitions are read for the
@@ -61,27 +69,35 @@ object Store {
       .parquet(path)
   }
 
+  private val pDate = StructField("p_date", DateType)
+
   def readFact(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("p_date")
+    FsUtil.readParquet(spark, path, pDate).drop("p_date")
 
   /** The distinct event dates an update batch touches — O(days in the
     * batch), bounded by the ingest cadence (an hourly run touches 1–2
-    * days), never O(data). Bringing this tiny set to the driver is the
-    * same move Delta's `replaceWhere` makes to build its partition
-    * predicate. Null-`tsCol` rows surface as a null entry. */
+    * days), never O(data). Each task keeps its partition's distinct
+    * dates and the driver merges them: one job, no shuffle, and
+    * O(partitions × days) rows collected. Bringing this tiny set to the
+    * driver is the same move Delta's `replaceWhere` makes to build its
+    * partition predicate. Null-`tsCol` rows surface as a null entry. */
   def touchedDates(updates: DataFrame, tsCol: String = "dt"): Seq[java.sql.Date] =
-    updates.select(to_date(col(tsCol)).as("p_date")).distinct()
-      .collect().map(_.getAs[java.sql.Date]("p_date")).toSeq
+    updates.select(to_date(col(tsCol))).as(Encoders.DATE)
+      .mapPartitions(_.toSet.iterator)(Encoders.DATE)
+      .collect().distinct.toSeq
 
   /** The stored fact restricted to the given `p_date` partitions — the
     * `isin` predicate is a static partition filter, so the scan lists and
     * reads ONLY those partitions' files. */
   def prunedFact(spark: SparkSession, path: String,
-                 dates: Seq[java.sql.Date]): DataFrame = {
+                 dates: Seq[java.sql.Date]): DataFrame =
+    pruned(FsUtil.readParquet(spark, path, pDate), dates)
+
+  private def pruned(stored: DataFrame, dates: Seq[java.sql.Date]): DataFrame = {
     val (nulls, real) = dates.partition(_ == null)
     val realPred = col("p_date").isin(real.map(d => lit(d)): _*)
     val pred = if (nulls.nonEmpty) realPred || col("p_date").isNull else realPred
-    spark.read.parquet(path).where(pred).drop("p_date")
+    stored.where(pred).drop("p_date")
   }
 
   /** Incremental MERGE (DO UPDATE) into a date-partitioned parquet fact:
@@ -109,25 +125,31 @@ object Store {
     // exactly this condition and nothing else.
     if (!keys.contains(tsCol)) throw new graft.sources.IncrementalMergeDeclined(
       s"date-partitioned merge keys $keys must include the partition timestamp '$tsCol'")
-    val spark = updates.sparkSession
-    // collapse within-batch duplicate keys up front so EVERY path —
-    // first write, DO UPDATE, DO NOTHING — sees one row per key (the
-    // lastWins window would collapse them anyway; the DO NOTHING
-    // anti-join would append both)
-    val batch = updates.dropDuplicates(keys)
-    if (!FsUtil.hasData(spark, path)) {
-      writeFactPartitioned(batch, path, tsCol, keys.map(col))
-      return
+    FsUtil.parquetTable(updates.sparkSession, path, pDate) match {
+      case None =>
+        writeFactPartitioned(updates.dropDuplicates(keys), path, tsCol, keys.map(col))
+      case Some(stored) =>
+        val dates = touchedDates(updates, tsCol)
+        // an empty batch has nothing to merge and nothing to rewrite
+        if (dates.nonEmpty) {
+          // the STORED schema, not the batch's: a stored table that lacks
+          // a batch column fails here, loudly, instead of reading as nulls
+          val existing = pruned(stored, dates).select(updates.columns.map(col).toIndexedSeq: _*)
+          writeFactPartitioned(mergeBatch(existing, updates, keys, lastWins),
+            path, tsCol, keys.map(col))
+        }
     }
-    val dates = touchedDates(batch, tsCol)
-    if (dates.isEmpty) return // empty batch: nothing to merge, nothing to rewrite
-    val existing = prunedFact(spark, path, dates)
-      .select(batch.columns.map(col).toIndexedSeq: _*)
-    val merged =
-      if (lastWins) upsertLastWins(existing, batch, keys)
-      else upsertDoNothing(existing, batch, keys)
-    writeFactPartitioned(merged, path, tsCol, keys.map(col))
   }
+
+  /** One merge policy over the stored rows, with every path seeing one
+    * batch row per key: the DO UPDATE window keeps one row per key by
+    * itself, so only DO NOTHING collapses within-batch duplicates first
+    * (its anti-join would append both). That spares DO UPDATE a dedup
+    * exchange. */
+  private def mergeBatch(existing: DataFrame, updates: DataFrame, keys: Seq[String],
+                         lastWins: Boolean): DataFrame =
+    if (lastWins) upsertLastWins(existing, updates, keys)
+    else upsertDoNothing(existing, updates.dropDuplicates(keys), keys)
 
   /** Date-partitioned parquet [[MergeSink]] — the default fact backend.
     * Merges are partition-pruned and incremental (see mergeFact*).
@@ -205,26 +227,22 @@ object Store {
     * first makes the read-modify-overwrite safe. */
   final case class ParquetSnapshotSink(path: String) extends MergeSink {
     def mergeLastWins(updates: DataFrame, keys: Seq[String]): Unit =
-      write(merge(updates, keys, upsertLastWins))
+      write(merge(updates, keys, lastWins = true))
     def mergeIfAbsent(updates: DataFrame, keys: Seq[String]): Unit =
-      write(merge(updates, keys, upsertDoNothing))
-    def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+      write(merge(updates, keys, lastWins = false))
+    def read(spark: SparkSession): DataFrame = FsUtil.readParquet(spark, path)
 
     /** Full rewrite (general MERGE write-back) — same materialize-then-
       * overwrite as every other write through this sink. */
     override def overwriteAll(merged: DataFrame): Unit = write(merged)
 
-    private def merge(updates: DataFrame, keys: Seq[String],
-                      policy: (DataFrame, DataFrame, Seq[String]) => DataFrame): DataFrame = {
-      val spark = updates.sparkSession
-      // every path sees one row per key (the DO NOTHING anti-join would
-      // otherwise append BOTH rows of a within-batch duplicate)
-      val batch = updates.dropDuplicates(keys)
-      if (FsUtil.hasData(spark, path)) {
-        val existing = read(spark).select(batch.columns.map(col).toIndexedSeq: _*)
-        policy(existing, batch, keys)
-      } else batch
-    }
+    private def merge(updates: DataFrame, keys: Seq[String], lastWins: Boolean): DataFrame =
+      FsUtil.parquetTable(updates.sparkSession, path) match {
+        // stored schema, as in mergeFact: a missing batch column fails
+        case Some(stored) =>
+          mergeBatch(stored.select(updates.columns.map(col).toIndexedSeq: _*), updates, keys, lastWins)
+        case None => updates.dropDuplicates(keys)
+      }
     private def write(merged: DataFrame): Unit =
       merged.localCheckpoint(true).write.mode("overwrite").parquet(path)
   }
@@ -256,7 +274,7 @@ object Store {
       offenders.partition(_ == "__HIVE_DEFAULT_PARTITION__")
     val realPred = col("p_date").isin(realDays.map(d => lit(java.sql.Date.valueOf(d))): _*)
     val pred = if (sentinel.nonEmpty) realPred || col("p_date").isNull else realPred
-    spark.read.parquet(path)
+    FsUtil.readParquet(spark, path, pDate)
       .where(pred)
       .repartition(col("p_date")) // one task → one file per compacted day
       .write
@@ -273,9 +291,8 @@ object Store {
     * small operational tables, not facts. A channel that was never
     * written (no rejects yet) is a no-op, like compactFact. */
   def compactSnapshot(spark: SparkSession, path: String, targetFiles: Int = 1): Unit =
-    if (FsUtil.hasData(spark, path))
-      spark.read.parquet(path).localCheckpoint(true)
-        .coalesce(targetFiles).write.mode("overwrite").parquet(path)
+    FsUtil.parquetTable(spark, path).foreach(_.localCheckpoint(true)
+      .coalesce(targetFiles).write.mode("overwrite").parquet(path))
 
   /** Bucketed table write: pre-shuffles once at write time so every
     * subsequent equi-join/aggregation on `bucketCol` between co-bucketed

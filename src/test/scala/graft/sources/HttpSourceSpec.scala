@@ -85,6 +85,20 @@ class HttpSourceSpec extends AnyFunSuite {
       .collect().toSet === Set("City1", "City2"))
   }
 
+  test("Ingest.run fetches each URL exactly once") {
+    val baseDir = java.nio.file.Files.createTempDirectory("graft_http_once").toString
+    val paths = Seq("/city/11", "/city/12", "/missing")
+    hits.clear()
+    val r = graft.weather.Ingest.run(spark,
+      Http.HttpSource(paths.map(p => s"$base$p"), partitions = 2),
+      s"$baseDir/cities", s"$baseDir/fact")
+    assert(r.okCount === 2 && r.badCount === 1 && r.bad.count() === 1)
+    assert(r.fact.count() === 2)
+    import scala.jdk.CollectionConverters._
+    val perPath = hits.asScala.toSeq.groupBy(_._1).map { case (p, hs) => p -> hs.size }
+    assert(perPath === paths.map(_ -> 1).toMap)
+  }
+
   test("a 200 with an empty body lands in the bad channel, never the fact") {
     val baseDir = java.nio.file.Files.createTempDirectory("graft_empty200").toString
     val r = graft.weather.Ingest.run(spark,

@@ -38,6 +38,8 @@ class IngestSpec extends AnyFunSuite {
       payload(1, "Hanoi", 1764129600, 22.5))
     val r2 = Ingest.run(spark, Ingest.CannedSource(hour2), cities, fact)
     assert(r2.fact.count() === 4)
+    // no bad document: an empty bad frame of the parse's schema
+    assert(r2.badCount === 0 && r2.bad.count() === 0 && r2.bad.schema === r1.bad.schema)
     val corrected = r2.fact
       .filter(col("city_id") === 1 && col("dt") === timestamp_seconds(lit(1764129600)))
       .head().getAs[Double]("temp")
@@ -122,6 +124,57 @@ class IngestSpec extends AnyFunSuite {
         |FROM current_weather w JOIN cities c USING (city_id)
         |ORDER BY c.city_name""".stripMargin).collect()
     assert(map.map(_.getString(0)).toSeq === Seq("Hanoi", "Hue"))
+  }
+
+  test("a warm hourly run launches at most 12 Spark jobs; a 404 adds only its quarantine copy") {
+    // the benchmark's batch shape: 14 cities into a store holding their
+    // history, 13 readings of a new hour plus one corrected re-send of a
+    // history hour, so the fact merge touches two days
+    val base = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    def run(docs: Seq[String]): Ingest.IngestResult =
+      Ingest.run(spark, Ingest.CannedSource(docs), s"$base/cities", s"$base/fact")
+    val day1 = 1764129600L // 2025-11-26 04:00 UTC
+    val day2 = day1 + 86400L
+    val cityIds = 1L to 14L
+    run(cityIds.flatMap(c => Seq(payload(c, s"City$c", day1, 20.0), payload(c, s"City$c", day2, 21.0))))
+    def batch(hour: Long): Seq[String] =
+      payload(1, "City1", day1, 25.0) +:
+        cityIds.tail.map(c => payload(c, s"City$c", day2 + hour * 3600L, 22.0))
+    run(batch(1)) // warm-up: the measured runs are warm, as in the benchmark
+
+    var good: Ingest.IngestResult = null
+    val goodJobs = org.apache.spark.graft.JobCount(spark.sparkContext) { good = run(batch(2)) }
+    assert(good.okCount === 14 && good.badCount === 0)
+    assert(goodJobs <= 12, s"a warm 14-document Ingest.run launched $goodJobs jobs")
+
+    var with404: Ingest.IngestResult = null
+    val jobs404 = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      with404 = run(batch(3).init :+ """{"cod":"404","message":"city not found"}""")
+    }
+    assert(with404.okCount === 13 && with404.badCount === 1 && with404.bad.count() === 1)
+    info(s"jobs per warm run: $goodJobs, with one 404: $jobs404")
+    assert(jobs404 <= goodJobs + 1,
+      s"one 404 took the run from $goodJobs to $jobs404 jobs; only its quarantine copy may add one")
+    // 14 cities × (2 history days + the 3 new hours), one re-send per run
+    assert(with404.fact.count() === 14 * 2 + 13 + 13 + 12)
+  }
+
+  test("forecast okCount counts exploded rows: an empty or absent list adds 0") {
+    val base = java.nio.file.Files.createTempDirectory("graft_fc_count").toString
+    def doc(cityId: Long, list: Option[String]): String =
+      s"""{${list.fold("")(l => s""""list":$l,""")}"city":{"id":$cityId,"name":"C$cityId",""" +
+        s""""country":"VN","coord":{"lat":21.0,"lon":105.8},"population":1,"timezone":25200,""" +
+        s""""sunrise":1764112440,"sunset":1764152047},"cod":"200"}"""
+    def entry(dt: Long): String =
+      s"""{"dt":$dt,"dt_txt":"x","main":{"temp":20.0,"humidity":40},""" +
+        s""""weather":[{"id":800,"main":"Clear","description":"c","icon":"01d"}]}"""
+    val r = Ingest.runForecast(spark, Ingest.CannedSource(Seq(
+        doc(1, Some(s"[${entry(1764136800)},${entry(1764147600)}]")),
+        doc(2, Some("[]")),
+        doc(3, None))),
+      s"$base/cities", s"$base/forecast")
+    assert(r.okCount === 2 && r.badCount === 0)
+    assert(r.fact.count() === r.okCount)
   }
 
   test("corpus SQL catalog exposes tables + graft functions") {

@@ -241,6 +241,87 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
+  test("jobless schema read equals Spark's inferred schema") {
+    val factDir = java.nio.file.Files.createTempDirectory("graft_schema_fact").toString
+    Store.mergeFactLastWins(Seq(
+      (1L, ts("2025-11-26 04:00:00"), 22.0), (2L, ts("2025-11-27 05:00:00"), 23.0),
+      (3L, null, 24.0)).toDF("city_id", "dt", "temp"), factDir, keys)
+    assert(graft.sources.FsUtil.readParquet(spark, factDir,
+      org.apache.spark.sql.types.StructField("p_date", org.apache.spark.sql.types.DateType)).schema
+      === spark.read.parquet(factDir).schema)
+    assert(Store.readFact(spark, factDir).schema === spark.read.parquet(factDir).drop("p_date").schema)
+
+    val citiesDir = java.nio.file.Files.createTempDirectory("graft_schema_dim").toString
+    val sink = Store.ParquetSnapshotSink(citiesDir)
+    sink.mergeLastWins(Seq((1L, "Hanoi", 21.0)).toDF("city_id", "city_name", "coord_lat"),
+      Seq("city_id"))
+    assert(sink.read(spark).schema === spark.read.parquet(citiesDir).schema)
+
+    // written by another engine: no Spark schema in the footer metadata
+    Seq("orders", "lineitem").foreach { t =>
+      assert(graft.sources.Tables.load(spark, SharedSpark.sf0001, t).schema
+        === spark.read.parquet(s"${SharedSpark.sf0001}/$t.parquet").schema, t)
+    }
+    // none of these reads launches a Spark job (inference runs one each)
+    assert(org.apache.spark.graft.JobCount(spark.sparkContext) {
+      Store.readFact(spark, factDir); sink.read(spark)
+      graft.sources.Tables.load(spark, SharedSpark.sf0001, "orders")
+    } === 0)
+    // a path without data fails as spark.read.parquet does
+    val empty = java.nio.file.Files.createTempDirectory("graft_schema_empty").toString
+    intercept[org.apache.spark.sql.AnalysisException](Store.readFact(spark, empty))
+    intercept[org.apache.spark.sql.AnalysisException](Store.readFact(spark, s"$empty/absent"))
+  }
+
+  test("a merge into a stored table that lacks a batch column fails loudly") {
+    val wider = Seq((1L, ts("2025-11-26 04:00:00"), 99.0, 40))
+      .toDF("city_id", "dt", "temp", "humidity")
+    val factDir = java.nio.file.Files.createTempDirectory("graft_narrow_fact").toString
+    Store.mergeFactLastWins(
+      Seq((1L, ts("2025-11-26 04:00:00"), 22.0)).toDF("city_id", "dt", "temp"), factDir, keys)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Store.mergeFactLastWins(wider, factDir, keys)
+    }
+    val snap = Store.ParquetSnapshotSink(
+      java.nio.file.Files.createTempDirectory("graft_narrow_dim").toString)
+    snap.mergeLastWins(Seq((1L, "Hanoi")).toDF("city_id", "name"), Seq("city_id"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      snap.mergeLastWins(Seq((1L, "Hanoi", 21.0)).toDF("city_id", "name", "lat"), Seq("city_id"))
+    }
+  }
+
+  test("DO UPDATE into an existing table writes one row for a key duplicated in the batch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dup_update").toString
+    Store.mergeFactLastWins(Seq(
+      (1L, ts("2025-11-26 04:00:00"), 22.0), (2L, ts("2025-11-26 04:00:00"), 23.0))
+      .toDF("city_id", "dt", "temp"), dir, keys)
+    Store.mergeFactLastWins(Seq(
+      (1L, ts("2025-11-26 04:00:00"), 50.0), (1L, ts("2025-11-26 04:00:00"), 51.0),
+      (3L, ts("2025-11-26 04:00:00"), 30.0), (3L, ts("2025-11-26 04:00:00"), 31.0))
+      .toDF("city_id", "dt", "temp"), dir, keys)
+    val back = Store.readFact(spark, dir).select("city_id", "temp").as[(Long, Double)].collect()
+    assert(back.map(_._1).sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(Set(50.0, 51.0).contains(back.find(_._1 == 1L).get._2))
+
+    val snap = Store.ParquetSnapshotSink(
+      java.nio.file.Files.createTempDirectory("graft_dup_update_dim").toString)
+    snap.mergeLastWins(Seq((1L, "A"), (2L, "B")).toDF("city_id", "name"), Seq("city_id"))
+    snap.mergeLastWins(Seq((1L, "C"), (1L, "D")).toDF("city_id", "name"), Seq("city_id"))
+    val dim = snap.read(spark).as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(dim.map(_._1) === Seq(1L, 2L) && Set("C", "D").contains(dim.head._2))
+  }
+
+  test("touchedDates: the distinct dates over every partition, null included") {
+    val rows = Seq(
+      (1L, ts("2025-11-26 04:00:00")), (2L, ts("2025-11-26 05:00:00")),
+      (3L, ts("2025-11-27 04:00:00")), (4L, null), (5L, ts("2025-11-26 06:00:00")))
+      .toDF("city_id", "dt").repartition(3)
+    val got = Store.touchedDates(rows)
+    assert(got.size === 3)
+    assert(got.toSet === Set(java.sql.Date.valueOf("2025-11-26"),
+      java.sql.Date.valueOf("2025-11-27"), null))
+  }
+
   test("library writes/reads leave session confs untouched (hygiene)") {
     val overwriteBefore = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     val dir = java.nio.file.Files.createTempDirectory("graft_conf").toString
