@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** Cluster-grade registration of every graft SQL function via
   * SparkSessionExtensions (SURVEY.md §7.3: keep custom work behind
@@ -17,6 +19,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * The same functions are also registerable per-session through
   * HashExprs.ensureRegistered / TextExprs.ensureRegistered (used by
   * graft.sources.Catalog) — this class is the deployment-config path.
+  *
+  * Besides the functions it injects these plan rules (PlanStable.scala
+  * for the last two):
+  *  - `RewriteAsOfJoin` (`injectOptimizerRule`) + `AsOfJoinStrategy`
+  *    (`injectPlannerStrategy`): the native as-of join;
+  *  - `GraftMergeRule` (`injectResolutionRule` and
+  *    `injectPostHocResolutionRule`): SQL MERGE INTO over graft sinks;
+  *  - [[DatePartitionBounds]] (`injectOptimizerRule`): `p_date` partition
+  *    bounds derived from a timestamp window over a relation that names
+  *    its timestamp column (`Store.readFact`), so the window prunes days;
+  *  - [[ParamLiterals]] (`injectColumnar`, `preColumnarTransitions`, which
+  *    runs right before `CollapseCodegenStages` on the adaptive and the
+  *    non-adaptive path): comparison literals in `FilterExec` conditions
+  *    stay out of generated source text, so a query that differs only in
+  *    such a value reuses its compiled classes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -97,6 +114,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the native as-of join operator: rewrite rule + physical strategy
     ext.injectOptimizerRule(_ => RewriteAsOfJoin)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+
+    // plan-stable refreshes: a moved timestamp window reads only its days
+    // and compiles no new class
+    ext.injectOptimizerRule(_ => DatePartitionBounds)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
 
     // SQL MERGE INTO over graft MergeSink temp views (SqlMerge.scala).
     // Injected BOTH into the resolution fixed point (captures the merge

@@ -98,8 +98,14 @@ object FsUtil {
     * non-merging inference, it assumes every file of the table carries
     * that schema. A footer holds no partition columns: a partitioned
     * table names them in `partitionColumns`, and they follow the data
-    * columns, as in Spark's own order. */
+    * columns, as in Spark's own order. `options` go to the reader;
+    * parquet ignores keys it does not know, so a caller may use one to
+    * mark the relation for a plan rule. */
   def parquetTable(spark: SparkSession, path: String,
+                   partitionColumns: StructField*): Option[DataFrame] =
+    parquetTable(spark, path, Map.empty[String, String], partitionColumns: _*)
+
+  def parquetTable(spark: SparkSession, path: String, options: Map[String, String],
                    partitionColumns: StructField*): Option[DataFrame] =
     firstDataFile(spark, path).map { file =>
       val meta = ParquetFooterReader.readFooter(
@@ -107,7 +113,7 @@ object FsUtil {
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       val data = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      spark.read.schema(partitionColumns.foldLeft(data)(_ add _)).parquet(path)
+      spark.read.schema(partitionColumns.foldLeft(data)(_ add _)).options(options).parquet(path)
     }
 
   /** [[parquetTable]] for a table that must exist: a path without data
@@ -115,7 +121,11 @@ object FsUtil {
     * UNABLE_TO_INFER_SCHEMA), as `spark.read.parquet` does. */
   def readParquet(spark: SparkSession, path: String,
                   partitionColumns: StructField*): DataFrame =
-    parquetTable(spark, path, partitionColumns: _*).getOrElse {
+    readParquet(spark, path, Map.empty[String, String], partitionColumns: _*)
+
+  def readParquet(spark: SparkSession, path: String, options: Map[String, String],
+                  partitionColumns: StructField*): DataFrame =
+    parquetTable(spark, path, options, partitionColumns: _*).getOrElse {
       val (f, root) = fs(spark, path)
       if (!f.exists(root))
         throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> f.makeQualified(root).toString))

@@ -10,10 +10,12 @@ import graft.operators.Relational
   * programs. All take the fact (and dim where needed) as inputs plus
   * optional city/date filters (F3/F4); filters are plain Catalyst
   * predicates, so they push down to the parquet scan as data filters
-  * (row-group statistics). They do NOT prune date partitions: the fact
-  * from [[Store.readFact]] has no `p_date` column, so the `dt` window
-  * never becomes a partition filter (`PartitionFilters: []` in the final
-  * plan) and every widget lists and opens every day's files.
+  * (row-group statistics). Over a fact from [[Store.readFact]] the `dt`
+  * window also prunes date partitions: `graft.plans.DatePartitionBounds`
+  * derives `p_date >= date(from) - 1` and `p_date <= date(to) + 1` (the
+  * day of slack covers the writer's time zone), so a widget opens only
+  * the window's days. The window's literals reach generated code as
+  * `graft.plans.ParamLiteral`s, so a moved window compiles no new class.
   */
 object Dashboard {
 

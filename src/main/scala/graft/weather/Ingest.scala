@@ -95,7 +95,9 @@ object Ingest {
 
     citiesSink.mergeLastWins(Flatten.citiesDim(wide), Seq("city_id"))
     factSink.mergeLastWins(Flatten.currentFact(wide), Seq("city_id", "dt"))
-    graft.operators.Lifecycle.drainAndUnpersist(spark, parsed)
+    // both merges are synchronous writes and `bad` is materialized, so no
+    // job of this call still reads the parse: no drain to wait out
+    parsed.unpersist(blocking = false)
     IngestResult(citiesSink.read(spark), factSink.read(spark), okCount, badCount, bad)
   }
 
@@ -143,7 +145,7 @@ object Ingest {
 
     citiesSink.mergeLastWins(Flatten.citiesDim(wide), Seq("city_id"))
     factSink.mergeLastWins(Flatten.forecastFact(wide), Seq("city_id", "dt"))
-    graft.operators.Lifecycle.drainAndUnpersist(spark, parsed)
+    parsed.unpersist(blocking = false) // no drain, as in runCurrent
     IngestResult(citiesSink.read(spark), factSink.read(spark), okCount, badCount, bad)
   }
 }

@@ -14,9 +14,12 @@ import graft.sources.{FsUtil, MergeSink}
   * Layout decisions (SURVEY.md §4): facts partitioned by `date(dt)`, so
   * a merge reads and rewrites only the days it touches; the cities dim is
   * tiny and unpartitioned (always broadcast in J1). The dashboard's `dt`
-  * window does NOT prune those partitions: [[readFact]] drops `p_date`,
-  * so the window reaches the scan as data filters only
-  * (`PartitionFilters: []`) and every widget lists and opens every day.
+  * window prunes those partitions although [[readFact]] drops `p_date`:
+  * the read names its `tsCol`, and `graft.plans.DatePartitionBounds`
+  * derives `p_date` bounds from the window's `dt` bounds with one day of
+  * slack each side (a writer's local date is at most a day from the UTC
+  * date), which the scan takes as `PartitionFilters`. The `dt` bounds
+  * stay data filters and decide which rows survive.
   *
   * Every read of a stored table goes through [[FsUtil.parquetTable]]: the
   * schema comes from one footer read on the driver, so a read launches
@@ -71,8 +74,15 @@ object Store {
 
   private val pDate = StructField("p_date", DateType)
 
-  def readFact(spark: SparkSession, path: String): DataFrame =
-    FsUtil.readParquet(spark, path, pDate).drop("p_date")
+  /** The stored fact without its `p_date` column. Contract: `path` was
+    * written by [[writeFactPartitioned]] (or a merge into it) with the
+    * same `tsCol`, so `p_date = to_date(tsCol)` in the writer's session
+    * time zone. The read marks its relation with `tsCol`, and a filter
+    * that bounds `tsCol` by constants then prunes `p_date` partitions
+    * (`graft.plans.DatePartitionBounds`). */
+  def readFact(spark: SparkSession, path: String, tsCol: String = "dt"): DataFrame =
+    FsUtil.readParquet(spark, path, Map(graft.plans.DatePartitionBounds.OptionKey -> tsCol), pDate)
+      .drop("p_date")
 
   /** The distinct event dates an update batch touches — O(days in the
     * batch), bounded by the ingest cadence (an hourly run touches 1–2
@@ -169,7 +179,7 @@ object Store {
       mergeFactLastWins(updates, path, keys, tsCol)
     def mergeIfAbsent(updates: DataFrame, keys: Seq[String]): Unit =
       mergeFactIfAbsent(updates, path, keys, tsCol)
-    def read(spark: SparkSession): DataFrame = readFact(spark, path)
+    def read(spark: SparkSession): DataFrame = readFact(spark, path, tsCol)
 
     /** Full rewrite (general MERGE write-back): STATIC overwrite so
       * partitions absent from `merged` (fully-deleted days) disappear —

@@ -75,4 +75,40 @@ class DashboardSpec extends AnyFunSuite {
       .collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
     assert(nulls.toSet === Set("1", null))
   }
+
+  test("a moved window compiles no class: the five widgets over withFilters at the bench's shape") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft_dash_codegen").toFile
+    try {
+      // 14 cities, 14 days of hourly readings, laid out as the bench's
+      // store: one partition per day, rows sorted by (city_id, dt)
+      val t0 = ts("2025-01-01 00:00:00").getTime
+      val rows = for (c <- 1L to 14L; h <- 0 until 14 * 24) yield
+        (c, new java.sql.Timestamp(t0 + h * 3600000L), 20.0 + c + h % 24, 40 + h % 50,
+          1000 + c.toInt, 1.0 + h % 7)
+      Store.writeFactPartitioned(
+        rows.toDF("city_id", "dt", "temp", "humidity", "pressure", "wind_speed"),
+        s"$dir/fact", "dt", Seq(col("city_id"), col("dt")))
+      (1L to 14L).map(c => (c, s"city$c", 10.0 + c, 100.0 + c))
+        .toDF("city_id", "city_name", "coord_lat", "coord_lon").write.parquet(s"$dir/cities")
+
+      def refresh(city: String, from: String, to: String): Seq[Seq[org.apache.spark.sql.Row]] = {
+        val cities = spark.read.parquet(s"$dir/cities")
+        val view = Dashboard.withFilters(
+          Store.readFact(spark, s"$dir/fact")
+            .join(broadcast(cities.select("city_id", "city_name")), "city_id"),
+          Some(city), Some(from), Some(to))
+        Seq(Dashboard.latestPerCity(view).select("city_id", "dt", "temp").orderBy("city_id"),
+          Dashboard.scorecards(view), Dashboard.temperatureByHour(view),
+          Dashboard.cityMap(view.drop("city_name"), cities), Dashboard.temperatureScale(view))
+          .map(_.collect().toSeq)
+      }
+      refresh("city3", "2025-01-02 00:00:00", "2025-01-05 00:00:00")
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val moved = refresh("city9", "2025-01-07 00:00:00", "2025-01-10 00:00:00")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 === 0L)
+      assert(moved.head.map(_.getTimestamp(1)) === Seq(ts("2025-01-10 00:00:00")))
+      assert(moved(2).size === 73)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }

@@ -159,6 +159,23 @@ class IngestSpec extends AnyFunSuite {
     assert(with404.fact.count() === 14 * 2 + 13 + 13 + 12)
   }
 
+  test("an ingest run releases its parse without a drain wait") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ingest_nodrain").toString
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    graft.operators.Lifecycle.substrateStatsSnapshot() // zero the counters
+    val r = Ingest.run(spark, Ingest.CannedSource(Seq(
+      payload(1, "Hanoi", 1764129600, 22.0), payload(2, "Hue", 1764129600, 28.0))),
+      s"$base/cities", s"$base/fact")
+    val (drainMs, drainTimeouts, _, _) = graft.operators.Lifecycle.substrateStatsSnapshot()
+    assert(drainMs === 0L && drainTimeouts === 0L)
+    // the merges' localCheckpoints stay registered (checkpointed); the
+    // cached parse must not
+    val leaked = (sc.getPersistentRDDs -- cachedBefore).values.filterNot(_.isCheckpointed)
+    assert(leaked.isEmpty, leaked.map(_.toDebugString).mkString("\n"))
+    assert(r.okCount === 2 && r.fact.count() === 2)
+  }
+
   test("forecast okCount counts exploded rows: an empty or absent list adds 0") {
     val base = java.nio.file.Files.createTempDirectory("graft_fc_count").toString
     def doc(cityId: Long, list: Option[String]): String =

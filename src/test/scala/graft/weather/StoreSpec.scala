@@ -1,6 +1,9 @@
 package graft.weather
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
@@ -8,7 +11,7 @@ import graft.SharedSpark
 /** Upsert-policy divergence + idempotence (SURVEY.md §5.3, FIXTURES.md §2:
   * "same (city_id, dt) twice with changed temp — DO UPDATE keeps the new
   * value, DO NOTHING keeps the old"). */
-class StoreSpec extends AnyFunSuite {
+class StoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 
@@ -351,5 +354,108 @@ class StoreSpec extends AnyFunSuite {
     val back = Store.readFact(spark, dir).orderBy("dt")
       .select("temp").as[Double].collect().toSeq
     assert(back === Seq(22.0, 99.0))
+  }
+
+  /** `q` over the window-marked read of a stored fact: its one scan in
+    * the final plan, its rows, and the rows of `q` over a plain read of
+    * the same files (no derived bounds). */
+  private def windowed(path: String, q: DataFrame => DataFrame, tsCol: String = "dt")
+      : (FileSourceScanExec, Seq[String], Seq[String]) = {
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
+    val df = q(Store.readFact(spark, path, tsCol))
+    val got = rows(df)
+    val Seq(scan) = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    (scan, got, rows(q(spark.read.parquet(path).drop("p_date"))))
+  }
+  private def pDateBounded(scan: FileSourceScanExec): Boolean =
+    scan.partitionFilters.exists(f => f.references.exists(_.name == "p_date") &&
+      !f.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull])
+  private def numFiles(scan: FileSourceScanExec): Long = scan.metrics("numFiles").value
+  private def instant(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+
+  test("a dt window prunes p_date partitions: strict, non-strict, flipped and equal bounds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_window").toString
+    // 14 daily partitions, a reading every 6 h for two cities, and a
+    // null-dt row in the null partition: 15 files
+    val t0 = instant("2025-01-01T00:00:00Z").getTime
+    val rows = (for (h <- 0 until 14 * 24 by 6; c <- 1L to 2L)
+      yield (c, new java.sql.Timestamp(t0 + h * 3600000L), h + c * 0.5, h % 50, 1000 + h % 9, c * 1.5)) :+
+      ((3L, null, 1.0, 1, 1, 1.0))
+    Store.writeFactPartitioned(
+      rows.toDF("city_id", "dt", "temp", "humidity", "pressure", "wind_speed"), dir)
+
+    val t = (s: String) => lit(s).cast("timestamp")
+    val cases = Seq[(String, DataFrame => DataFrame, Seq[String], Int)](
+      ("non-strict window", f => Dashboard.scorecards(Dashboard.withFilters(f,
+        from = Some("2025-01-05 00:00:00"), to = Some("2025-01-07 18:00:00"))),
+        Seq("GreaterThanOrEqual(dt,", "LessThanOrEqual(dt,"), 6),
+      ("strict window", f => Dashboard.temperatureByHour(
+        f.where(col("dt") > t("2025-01-05 00:00:00") && col("dt") < t("2025-01-07 18:00:00"))),
+        Seq("GreaterThan(dt,", "LessThan(dt,"), 6),
+      ("flipped operands", f => Dashboard.scorecards(
+        f.where(t("2025-01-05 00:00:00") <= col("dt") && t("2025-01-07 18:00:00") > col("dt"))),
+        Seq("GreaterThanOrEqual(dt,", "LessThan(dt,"), 6),
+      ("dt = x", f => f.where(col("dt") === t("2025-01-06 06:00:00")),
+        Seq("EqualTo(dt,"), 3),
+      ("window ending at midnight", f => Dashboard.temperatureByHour(Dashboard.withFilters(f,
+        from = Some("2025-01-05 00:00:00"), to = Some("2025-01-07 00:00:00"))),
+        Seq("GreaterThanOrEqual(dt,", "LessThanOrEqual(dt,"), 5))
+    cases.foreach { case (name, q, pushed, maxFiles) =>
+      val (scan, got, want) = windowed(dir, q)
+      assert(got === want, name)
+      assert(got.nonEmpty, name)
+      assert(pDateBounded(scan), s"$name: ${scan.partitionFilters}")
+      assert(numFiles(scan) <= maxFiles, name)
+      pushed.foreach(p => assert(scan.metadata("PushedFilters").contains(p), s"$name: $p"))
+    }
+    // `dt <= to` at exact midnight keeps the midnight readings
+    val (_, midnight, _) = windowed(dir, f => Dashboard.withFilters(f,
+      from = Some("2025-01-05 00:00:00"), to = Some("2025-01-07 00:00:00")).select("dt"))
+    assert(midnight.last === "[2025-01-07 00:00:00.0]" && midnight.size === 18)
+    // the null-dt row: a window drops it, and without a bound nothing prunes
+    val (scan, nulls, plain) = windowed(dir, _.where(col("dt").isNull))
+    assert(nulls === plain && nulls.size === 1 && !pDateBounded(scan))
+    assert(numFiles(scan) === 15)
+  }
+
+  test("p_date bounds keep every matching row of a store written in another time zone") {
+    val zone = "spark.sql.session.timeZone"
+    Seq("Asia/Ho_Chi_Minh", "America/Los_Angeles").foreach { tz =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_window_tz").toString
+      val t0 = instant("2025-01-01T00:00:00Z").getTime
+      val rows = (0 until 10 * 24).map(h => (1L, new java.sql.Timestamp(t0 + h * 3600000L), h.toDouble))
+      spark.conf.set(zone, tz)
+      try Store.writeFactPartitioned(rows.toDF("city_id", "dt", "temp"), dir)
+      finally spark.conf.set(zone, "UTC")
+      // bounds 7 h before and 7 h after a UTC midnight
+      Seq("2025-01-04 17:00:00" -> "2025-01-07 17:00:00",
+          "2025-01-05 07:00:00" -> "2025-01-08 07:00:00").foreach { case (from, to) =>
+        val (scan, got, want) = windowed(dir, f => Dashboard.withFilters(f,
+          from = Some(from), to = Some(to)).select("dt", "temp"))
+        assert(got === want && got.size === 73, s"$tz $from..$to")
+        assert(pDateBounded(scan) && numFiles(scan) < 11, s"$tz $from..$to")
+      }
+    }
+  }
+
+  test("a window on another timestamp column derives no p_date bound") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_window_other").toString
+    val t0 = instant("2025-01-01T00:00:00Z").getTime
+    // `dt` runs five days behind the partition timestamp `event_ts`
+    val rows = (0 until 10 * 24 by 3).map { h =>
+      val ev = new java.sql.Timestamp(t0 + h * 3600000L)
+      (1L, ev, new java.sql.Timestamp(ev.getTime - 5 * 86400000L), h.toDouble)
+    }.toDF("city_id", "event_ts", "dt", "temp")
+    val sink = Store.ParquetDateSink(dir, "event_ts")
+    sink.mergeLastWins(rows, Seq("city_id", "event_ts"))
+    val byDt = (f: DataFrame) => Dashboard.withFilters(f,
+      from = Some("2025-01-02 00:00:00"), to = Some("2025-01-03 00:00:00"))
+    val (scan, got, want) = windowed(dir, byDt, "event_ts")
+    assert(got === want && got.size === 9)
+    assert(!pDateBounded(scan))
+    assert(sink.read(spark).transform(byDt).count() === 9)
+    val (evScan, evGot, evWant) = windowed(dir,
+      _.where(col("event_ts") >= lit("2025-01-07 00:00:00").cast("timestamp")), "event_ts")
+    assert(evGot === evWant && evGot.size === 32 && pDateBounded(evScan))
   }
 }
