@@ -16,6 +16,16 @@ private final class BenchTelemetry extends org.apache.spark.scheduler.SparkListe
   private val removed = new AtomicLong
   private val spill = new AtomicLong
   private val tasks = new AtomicLong
+  private val jobs = new AtomicLong
+  private val taskRun = new AtomicLong
+  private val shuffle = new AtomicLong
+
+  // jobs, task run ms and shuffle bytes follow the perfbench tracer's
+  // definitions: one per job start, Σ executorRunTime, and shuffle
+  // bytes written plus total bytes read
+  override def onJobStart(
+      e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    jobs.incrementAndGet()
 
   override def onTaskEnd(
       e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -24,6 +34,9 @@ private final class BenchTelemetry extends org.apache.spark.scheduler.SparkListe
     if (m != null) {
       taskGc.addAndGet(m.jvmGCTime)
       spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+      taskRun.addAndGet(m.executorRunTime)
+      shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten +
+        m.shuffleReadMetrics.totalBytesRead)
     }
     e.reason match {
       case org.apache.spark.Success => ()
@@ -52,7 +65,67 @@ private final class BenchTelemetry extends org.apache.spark.scheduler.SparkListe
     stageRetry = retries.getAndSet(0L),
     blocksRemoved = removed.getAndSet(0L),
     spillBytes = spill.getAndSet(0L),
-    tasks = tasks.getAndSet(0L))
+    tasks = tasks.getAndSet(0L),
+    jobs = jobs.getAndSet(0L),
+    taskRunMs = taskRun.getAndSet(0L),
+    shuffleBytes = shuffle.getAndSet(0L))
+}
+
+/** The per-query run protocol: [[Bench]] times every probe with it and
+  * `graft.tools.Profile` profiles named probes with it, so a profiled
+  * run is a benched run. Each run resets the query state before the
+  * timer, executes the probe's bench body into the `noop` sink, and
+  * returns the run's counters. The runner's listener stays registered
+  * on `spark` until [[close]]. */
+final class BenchRunner(spark: org.apache.spark.sql.SparkSession) {
+  import Bench.{RunStats, SubstrateStats}
+
+  // Telemetry (round 13): every timed run carries whole-JVM GC ms,
+  // task-failure / stage-retry counts, block removals, and spill —
+  // so an over-budget iteration in ANY environment names its cause
+  // in the artifact instead of needing a reproduction.
+  private val telemetry = new BenchTelemetry
+  spark.sparkContext.addSparkListener(telemetry)
+
+  private def jvmGcMs: Long = {
+    val it = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.iterator()
+    var s = 0L
+    while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) s += t }
+    s
+  }
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  def exec(name: String, sfDir: String): RunStats = {
+    // Time the raw operator where the gate query wraps it in a
+    // self-oracle audit — the audit's bounded exact-truth pass would
+    // otherwise dominate and mask operator regressions.
+    val body = graft.queries.Probes.benchBody(name)
+    // measurement validity: no timed run may read a previous run's
+    // caches; cleanup runs before the timer starts and is never timed
+    GraftSession.resetQueryState(spark)
+    telemetry.snapshotAndReset() // drop whatever bled in between queries
+    graft.operators.Lifecycle.substrateStatsSnapshot()
+    val compiles0 = compiles
+    val gc0 = jvmGcMs
+    val sec = Bench.time(body(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
+    val (dMs, dTo, wMs, nR) =
+      graft.operators.Lifecycle.substrateStatsSnapshot()
+    RunStats(sec, jvmGcMs - gc0, compiles - compiles0,
+      telemetry.snapshotAndReset(), SubstrateStats(dMs, dTo, wMs, nR))
+  }
+
+  /** One query's block: an untimed warm-up run (recorded in telemetry,
+    * never in the timing sample), then `iters` timed runs. */
+  def block(name: String, sfDir: String,
+            iters: Int): (RunStats, Seq[RunStats]) = {
+    val warm = exec(name, sfDir)
+    (warm, (1 to iters).map(_ => exec(name, sfDir)))
+  }
+
+  def close(): Unit = spark.sparkContext.removeSparkListener(telemetry)
 }
 
 /** Benchmark main: runs every SparkEntry query against
@@ -94,7 +167,8 @@ object Bench {
 
   /** Listener counters for one timed run (see [[BenchTelemetry]]). */
   case class RunCounters(taskGcMs: Long, taskFail: Long, stageRetry: Long,
-                         blocksRemoved: Long, spillBytes: Long, tasks: Long)
+                         blocksRemoved: Long, spillBytes: Long, tasks: Long,
+                         jobs: Long, taskRunMs: Long, shuffleBytes: Long)
 
   /** Substrate counters for one timed run (round-13 optimization
     * telemetry — see [[graft.operators.Lifecycle.substrateStatsSnapshot]]):
@@ -114,10 +188,33 @@ object Bench {
   case class RunStats(sec: Double, gcMs: Long, compiles: Long,
                       c: RunCounters, s: SubstrateStats)
 
+  /** Timed runs per query: `SPARK_GRAFT_BENCH_ITERS`, default 3. */
+  def iters: Int = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
+    require(n >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $n")
+    n
+  }
+
+  /** Wall seconds of `body`, or −1 when it throws. */
+  def time(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try body
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] failed: ${e.getMessage}")
+      return -1.0
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Median of the successful runs, −1 when none succeeded. */
+  def median(xs: Seq[Double]): Double = {
+    val ok = xs.filter(_ >= 0)
+    if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.length / 2)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    require(iters >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $iters")
+    val iters = Bench.iters
     // SPARK_GRAFT_BENCH_ADVERSE=1: pin ~40% of the max heap as
     // unreclaimable ballast BEFORE the session exists, so the whole
     // sweep runs under genuine memory pressure — storage blocks evict,
@@ -138,69 +235,16 @@ object Bench {
     }
     val cpus = GraftSession.cpus
     val spark = GraftSession.getOrCreate("graft-bench")
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try body
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] failed: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // Telemetry (round 13): every timed run carries whole-JVM GC ms,
-    // task-failure / stage-retry counts, block removals, and spill —
-    // so an over-budget iteration in ANY environment names its cause
-    // in the artifact instead of needing a reproduction.
-    val telemetry = new BenchTelemetry
-    spark.sparkContext.addSparkListener(telemetry)
-    def jvmGcMs: Long = {
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      var s = 0L
-      while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) s += t }
-      s
-    }
-    def compiles: Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-    def exec(name: String): RunStats = {
-      // Time the raw operator where the gate query wraps it in a
-      // self-oracle audit — the audit's bounded exact-truth pass would
-      // otherwise dominate and mask operator regressions.
-      val body = graft.queries.Probes.benchBody(name)
-      // measurement validity: no timed run may read a previous run's
-      // caches; cleanup runs before the timer starts and is never timed
-      GraftSession.resetQueryState(spark)
-      telemetry.snapshotAndReset() // drop whatever bled in between queries
-      graft.operators.Lifecycle.substrateStatsSnapshot()
-      val compiles0 = compiles
-      val gc0 = jvmGcMs
-      val sec = time(body(spark, sfDir)
-        .write.format("noop").mode("overwrite").save())
-      val (dMs, dTo, wMs, nR) =
-        graft.operators.Lifecycle.substrateStatsSnapshot()
-      RunStats(sec, jvmGcMs - gc0, compiles - compiles0,
-        telemetry.snapshotAndReset(), SubstrateStats(dMs, dTo, wMs, nR))
-    }
-
-    def median(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.length / 2)
-    }
+    val runner = new BenchRunner(spark)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    exec(names.head) // session warmup: JVM + codegen + parquet footer cache
+    // session warmup: JVM + codegen + parquet footer cache
+    runner.exec(names.head, sfDir)
 
-    // per-query block: one warm-up pass (recorded in telemetry, never
-    // in the timing sample), then the timed runs — warm-up cost never
-    // enters the sample (see methodology above)
+    // per-query block: warm-up cost never enters the sample (see
+    // methodology above)
     val stats: Seq[(String, (RunStats, Seq[RunStats]))] =
-      names.map { n =>
-        val warm = exec(n)
-        n -> (warm, (1 to iters).map(_ => exec(n)))
-      }
+      names.map(n => n -> runner.block(n, sfDir, iters))
     val samples: Map[String, Seq[Double]] =
       stats.map { case (n, (_, runs)) => n -> runs.map(_.sec) }.toMap
 
@@ -281,8 +325,8 @@ object Bench {
     }.mkString("{", ",", "}")
     // Per-run telemetry block: for EVERY query, each timed run's wall
     // seconds, whole-JVM GC ms, codegen compiles, task failures, stage
-    // retries, block removals, spill MiB, and task count (arrays aligned
-    // run-by-run),
+    // retries, block removals, spill MiB, task count, jobs, task run
+    // ms and shuffle bytes (arrays aligned run-by-run),
     // plus the untimed warm-up pass — the self-diagnosis the flap
     // rounds lacked. A query over budget here now SHOWS whether the
     // bad iteration burned GC, retried stages, lost blocks, spilled,
@@ -304,7 +348,10 @@ object Bench {
         s""""drain_ms":${jl(runs.map(_.s.drainMs))},""" +
         s""""drain_timeouts":${jl(runs.map(_.s.drainTimeouts))},""" +
         s""""round_write_ms":${jl(runs.map(_.s.roundWriteMs))},""" +
-        s""""rounds":${jl(runs.map(_.s.rounds))}}"""
+        s""""rounds":${jl(runs.map(_.s.rounds))},""" +
+        s""""jobs":${jl(runs.map(_.c.jobs))},""" +
+        s""""task_run_ms":${jl(runs.map(_.c.taskRunMs))},""" +
+        s""""shuffle_bytes":${jl(runs.map(_.c.shuffleBytes))}}"""
     }.mkString("{", ",", "}")
     val allRuns = stats.flatMap { case (_, (w, rs)) => w +: rs }
     val gcTotalMs = allRuns.map(_.gcMs).sum

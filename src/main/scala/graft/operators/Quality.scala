@@ -450,8 +450,10 @@ object Quality {
     * CONSTANTS (they sum to exactly 1e6), not engine log10 calls.
     *
     * Scale posture: one narrow digit projection into a 9-row aggregate
-    * (map-side combined), joined onto the broadcast 9-row expectation
-    * spine — digits with zero support still appear. Non-positive and
+    * (map-side combined), left-joined from the 9-row expectation spine
+    * — digits with zero support still appear. The preserved side of a
+    * left outer join can never be the build side, so the ≤9-row digit
+    * aggregate is the one broadcast. Non-positive and
     * null values are excluded (Benford is defined on positive
     * magnitudes).
     *
@@ -473,7 +475,7 @@ object Quality {
         expr("CAST(__v DIV CAST(power(10, length(CAST(__v AS STRING)) - 1) AS BIGINT) AS INT)"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
     val total = digits.agg(coalesce(sum(col("n")), lit(0L)).as("__t"))
-    broadcast(spine)
+    spine
       .join(digits, Seq("digit"), "left_outer")
       .crossJoin(broadcast(total))
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),

@@ -208,6 +208,20 @@ class RelationalSpec extends AnyFunSuite {
     // cache's monotonically_increasing_id — never a row-scaled window
     assert(plan.contains("InMemoryTableScan"), plan)
     assert(!plan.contains("windowspecdefinition(__pid"), plan)
+    // ... and it is ONE frame: the offsets pass and the rank pass each
+    // scan the same cache, so the range exchange under it runs once
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def cacheScans(p: SparkPlan): Seq[InMemoryTableScanExec] = p match {
+      case s: InMemoryTableScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => cacheScans(a.executedPlan)
+      case q: QueryStageExec => cacheScans(q.plan)
+      case other => other.children.flatMap(cacheScans)
+    }
+    val scans = cacheScans(ranked.queryExecution.executedPlan)
+    assert(scans.size === 2, plan)
+    assert(scans.forall(_.relation.cacheBuilder eq scans.head.relation.cacheBuilder), plan)
     // the ONE allowed SinglePartition exchange is the offsets cumsum,
     // which runs over the O(#partitions)-row counts frame, and must
     // feed the broadcast side only (i.e. sit near the tiny count
