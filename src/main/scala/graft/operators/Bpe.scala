@@ -144,18 +144,14 @@ object Bpe {
         // operators' self-referencing recurrences), so the cadence only
         // trades plan-analysis time against write-job overhead — 40
         // rounds at sf0.1 measured 14.8 s with a per-round cut, 5.8 s
-        // warm at the default every-8 cadence. Each cut deletes the one
-        // it supersedes (merges is driver state; nothing re-reads old
-        // cuts).
+        // warm at the default every-8 cadence (merges is driver state;
+        // nothing re-reads old cuts).
         vocab = sink.cut(i + 1, vocab.select(
             fuseUdf(col("syms"), lit(best._1), lit(best._2)).as("syms"),
             col("c")))
         i += 1
       }
     }
-    // the result is the driver-side merge list — no frame escapes, so
-    // the last cut's scratch files are dead too
-    sink.close()
     merges.toSeq
   }
 

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * materialize), one (cluster, dim)-keyed partial→final aggregate for
   * the update (shuffle = k·dims rows, not vectors), and an O(k·dims)
   * driver-side centroid table — the same bounded-driver-state contract
-  * as IVF's sampled training. The micro-unit vector frame persists
-  * across iterations (released before returning); assignment output is
+  * as IVF's sampled training. The micro-unit vector frame is held
+  * across iterations (released at the query boundary); assignment output is
   * one (id, cluster, dist) row per vector.
   *
   * i64 headroom: |x| ≤ ~9·10³ keeps Σ_d (Δ_micro)² under 2⁶³ at 4096
@@ -59,20 +59,19 @@ object Clustering {
         col("__best.cluster").as("cluster"),
         col("__best.dist2").as("dist2"))
 
-  /** Shared Lloyd preamble + loop: micro-quantize (PERSISTED — caller
-    * unpersists), deterministic digest-order seeds, `iters` update
+  /** Shared Lloyd preamble + loop: micro-quantize (held for the query,
+    * [[Lifecycle.hold]]), deterministic digest-order seeds, `iters` update
     * rounds. Returns (micro, final centroids); centroids empty iff the
     * corpus is. */
   private def lloydFit(embs: DataFrame, k: Int, iters: Int, idCol: String,
                        vecCol: String): (DataFrame, Seq[(Int, Seq[Long])]) = {
     require(k >= 1, "k >= 1")
     require(iters >= 1, "iters >= 1")
-    val micro = embs.select(
+    val micro = Lifecycle.hold(embs.select(
       col(idCol),
       transform(col(vecCol), x =>
         floor(x.cast("double") * lit(1000000.0d) + lit(0.5d)).cast("long"))
-        .as("vm"))
-      .persist()
+        .as("vm")))
 
     // deterministic seeds: k lowest (digest, id) — layout-independent
     val seeds = micro
@@ -120,17 +119,10 @@ object Clustering {
     // empty corpus → no seeds → the candidate array would be a
     // zero-length VOID array and the struct extraction fails analysis;
     // return the (id, cluster, dist2) schema with zero rows instead
-    if (centroids.isEmpty) {
-      val empty = micro
-        .select(col(idCol), lit(0).as("cluster"), lit(0L).as("dist2"))
+    if (centroids.isEmpty)
+      micro.select(col(idCol), lit(0).as("cluster"), lit(0L).as("dist2"))
         .where(lit(false))
-      micro.unpersist()
-      return empty
-    }
-    val out = assignFrom(micro, centroids, idCol).drop("vm")
-      .localCheckpoint(true)
-    Lifecycle.drainAndUnpersist(embs.sparkSession, micro)
-    out
+    else assignFrom(micro, centroids, idCol).drop("vm")
   }
 
   /** Simplified (centroid-based) silhouette per cluster — the cluster-
@@ -146,7 +138,7 @@ object Clustering {
     * well-separated cluster; near 0 → the cluster boundary runs through
     * the data and k is wrong. Degenerate a² = b² = 0 scores 0.
     *
-    * One extra narrow pass over the persisted micro frame with the same
+    * One extra narrow pass over the held micro frame with the same
     * in-row k-candidate fold (no row fanout), then a k-sized aggregate.
     * Requires k ≥ 2 (no "other" centroid otherwise). Output: `cluster`
     * LONG, `n_vecs`, `mean_s_ppm`, `min_s_ppm`, `max_s_ppm` LONG;
@@ -156,14 +148,11 @@ object Clustering {
                            vecCol: String = "embedding"): DataFrame = {
     require(k >= 2, "silhouette needs k >= 2")
     val (micro, centroids) = lloydFit(embs, k, iters, idCol, vecCol)
-    if (centroids.isEmpty) {
-      val empty = micro.select(lit(0L).as("cluster"), lit(0L).as("n_vecs"),
+    if (centroids.isEmpty)
+      return micro.select(lit(0L).as("cluster"), lit(0L).as("n_vecs"),
           lit(0L).as("mean_s_ppm"), lit(0L).as("min_s_ppm"),
           lit(0L).as("max_s_ppm"))
         .where(lit(false))
-      micro.unpersist()
-      return empty
-    }
     val scored = micro
       .select(col(idCol), candidateArray(centroids).as("__all"))
       .select(col(idCol), array_min(col("__all")).as("__best"),
@@ -179,16 +168,13 @@ object Clustering {
           expr("""CAST((CAST(__b2 AS DECIMAL(38,0)) - __a2) * 1000000
                  |  div greatest(__a2, __b2) AS BIGINT)""".stripMargin))
           .otherwise(lit(0L)))
-    val out = scored.groupBy(col("cluster"))
+    scored.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_vecs"),
         expr("CAST(sum(CAST(__s AS DECIMAL(38,0))) DIV count(1) AS BIGINT)")
           .as("mean_s_ppm"),
         min(col("__s")).as("min_s_ppm"),
         max(col("__s")).as("max_s_ppm"))
       .orderBy("cluster")
-      .localCheckpoint(true)
-    Lifecycle.drainAndUnpersist(embs.sparkSession, micro)
-    out
   }
 
   /** Top terms per cluster — c-TF-IDF topic labeling (the BERTopic

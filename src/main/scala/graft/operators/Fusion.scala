@@ -390,7 +390,7 @@ object Fusion {
     *
     * Scale posture: duels collapse ONCE to a symmetric (i, j, n_ij)
     * games frame and a per-player wins frame — pair-space sized, never
-    * duel-space. Each round is one join of the persisted games frame
+    * duel-space. Each round is one join of the held games frame
     * with the player-sized strength frame + one map-side-combined sum,
     * the rescale max observed by the round's write job (the
     * [[graft.operators.Graph]] edge-cache shape); state is one long per
@@ -404,29 +404,26 @@ object Fusion {
   def bradleyTerry(duels: DataFrame, winner: Column, loser: Column,
                    iters: Int): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    // normalized duels persist for the round of frame-builds below —
+    // normalized duels are held for the round of frame-builds below —
     // games AND wins each scan it (the graph tier's edge-cache
-    // discipline); two longs per duel, freed before returning
-    val d = duels.select(winner.cast("long").as("__w"),
+    // discipline); two longs per duel
+    val d = Lifecycle.hold(duels.select(winner.cast("long").as("__w"),
         loser.cast("long").as("__l"))
       .filter(col("__w").isNotNull && col("__l").isNotNull &&
-        col("__w") =!= col("__l"))
-      .persist()
-    val games = d.select(col("__w").as("i"), col("__l").as("j"))
+        col("__w") =!= col("__l")))
+    val games = Lifecycle.hold(d.select(col("__w").as("i"), col("__l").as("j"))
       .union(d.select(col("__l").as("i"), col("__w").as("j")))
       .groupBy(col("i"), col("j")).agg(count(lit(1)).as("n"))
-      .repartition(col("i")).persist()
+      .repartition(col("i")))
     val wins = d.groupBy(col("__w").as("p"))
       .agg(count(lit(1)).as("wins"))
-    val players = games.select(col("i").as("player")).distinct()
+    val players = Lifecycle.hold(games.select(col("i").as("player")).distinct()
       .join(wins, col("player") === col("p"), "left")
       .select(col("player"),
-        coalesce(col("wins"), lit(0L)).as("wins"))
-      .persist()
+        coalesce(col("wins"), lit(0L)).as("wins")))
 
     var strength = players.select(col("player"), lit(1000000L).as("s"))
-    // strength is a lazy view over each round's written `raw`; the
-    // sink deletes the previous raw once the next one is written.
+    // strength is a lazy view over each round's written `raw`.
     // The rescale max is an OBSERVED metric of the round's write job
     // (round 14): the former agg(max) + crossJoin(broadcast) cost one
     // extra scan + one broadcast-exchange job per round; the observed
@@ -463,15 +460,11 @@ object Fusion {
     }
     val gamesPer = games.groupBy(col("i").as("gp"))
       .agg(coalesce(sum(col("n")), lit(0L)).as("games"))
-    val out = players
+    players
       .join(strength, "player")
       .join(gamesPer, col("player") === col("gp"))
       .select(col("player"), col("s").as("strength_micro"), col("wins"),
         col("games"))
       .orderBy(col("player"))
-      .localCheckpoint(true)
-    sink.close() // out consumed the last raw
-    Lifecycle.drainAndUnpersist(duels.sparkSession, games, players, d)
-    out
   }
 }

@@ -36,18 +36,19 @@ object Graph {
 
   /** The unweighted edge static the PageRank, PPR, HITS and
     * label-propagation loops scan every round: canonical (`src`, `dst`)
-    * LONG edges, duplicates collapsed, persisted, plus the persisted
-    * vertex set (every node appearing as src OR dst — a pure source
-    * receives nothing but must survive every round; an inner-join-only
+    * LONG edges, duplicates collapsed, held, plus the held vertex set
+    * (every node appearing as src OR dst — a pure source receives
+    * nothing but must survive every round; an inner-join-only
     * recurrence would drop it and, transitively, its contributions).
-    * `decorate` extends the vertex frame before it is persisted (PPR's
-    * seed flag). The caller releases both frames.
+    * `decorate` extends the vertex frame before it is held (PPR's seed
+    * flag). Both belong to the query scope ([[Lifecycle.hold]]), so
+    * calls in one query over the same edges share one cache.
     *
     * ONE shuffle builds the edges: the explicit CLUSTER BY src runs
     * first, and the distinct's ClusteredDistribution(src, dst) is
     * satisfied by hash(src), so dedup rides the same exchange. The user
     * repartition is exempt from AQE coalescing, so the cached layout is
-    * a deterministic hash(src). Without the persist, the degree
+    * a deterministic hash(src). Without the hold, the degree
     * aggregate, the per-round joins and the vertex set would each re-run
     * the caller's whole edge construction (a fact⋈dim join + distinct
     * for q78).
@@ -67,15 +68,15 @@ object Graph {
   private def edgeStatic(edges: DataFrame,
                          decorate: DataFrame => DataFrame = identity)
       : (DataFrame, DataFrame) = {
-    val e = edges.select(col("src").cast("long").as("src"),
+    val e = Lifecycle.hold(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-      .repartition(col("src")).distinct().persist()
+      .repartition(col("src")).distinct())
     (e, vertexSet(e, decorate))
   }
 
   private def vertexSet(e: DataFrame, decorate: DataFrame => DataFrame): DataFrame =
-    decorate(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()).persist()
+    Lifecycle.hold(decorate(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()))
 
   /** The edge static with each edge's source out-degree `__d` attached,
     * lazy over the cached edges (see [[edgeStatic]] for its plan). */
@@ -88,14 +89,13 @@ object Graph {
     * `densify` turns the last state into the output.
     *
     * Rounds COMPOSE LAZILY: the sink writes a round only on its cut
-    * cadence (deleting the cut it supersedes) and always writes the
-    * densified output, which the returned frame reads. Each round
-    * references the previous state EXACTLY ONCE, so the composed plan
-    * grows linearly (never the 2^iters doubling HITS guards against)
-    * and every shuffle in it executes once. A segment between cuts is a
-    * pure lazy plan over persisted statics and the previous cut's file
-    * scan, so a lost task recomputes at most one segment from durable
-    * inputs.
+    * cadence, and the returned frame is the lazy plan of the rounds
+    * after the last cut plus the densify. Each round references the
+    * previous state EXACTLY ONCE, so the composed plan grows linearly
+    * (never the 2^iters doubling HITS guards against) and every shuffle
+    * in it executes once per read. A segment between cuts is a pure
+    * lazy plan over held statics and the previous cut's file scan, so a
+    * lost task recomputes at most one segment from durable inputs.
     *
     * ROUND STATE IS SPARSE: a vertex absent from the state frame holds
     * its closed-form default (PageRank: the base term; label
@@ -109,7 +109,7 @@ object Graph {
     val sink = Lifecycle.roundSink(spark)
     var state: Option[DataFrame] = None
     for (i <- 1 until iters) state = Some(sink.cut(i, step(state)))
-    sink.round(densify(step(state)))
+    densify(step(state))
   }
 
   /** The exact integer rank recurrence shared by the PageRank variants:
@@ -117,14 +117,11 @@ object Graph {
     * (round 1) or `c` (later rounds, over the previous in-mass `__in`,
     * left-joined on `src`) to its `dst`, and the in-mass is
     * (dampNum · Σ contrib) DIV dampDen. The output is
-    * `rankBase + coalesce(__in, 0)` for every vertex, then the statics
-    * are released. */
-  private def massRounds(e: DataFrame, vertices: DataFrame,
-                         static: DataFrame, iters: Int,
+    * `rankBase + coalesce(__in, 0)` for every vertex. */
+  private def massRounds(vertices: DataFrame, static: DataFrame, iters: Int,
                          dampNum: Long, dampDen: Long,
                          c0: String, c: String, rankBase: Column): DataFrame = {
-    val spark = e.sparkSession
-    val out = fixedRounds(spark, iters) { sums =>
+    fixedRounds(static.sparkSession, iters) { sums =>
       sums.fold(static.select(col("dst").as("node"), expr(c0).as("__c"))) { s =>
         static.join(s, static("src") === s("node"), "left")
           .select(col("dst").as("node"), expr(c).as("__c"))
@@ -134,11 +131,6 @@ object Graph {
       vertices.join(sums, Seq("node"), "left")
         .select(col("node"), (rankBase + coalesce(col("__in"), lit(0L))).as("rank"))
     }
-    // the output is materialized; release the statics only after the
-    // session's async exchange jobs drain — see
-    // [[Lifecycle.drainAndUnpersist]] for the race this closes
-    Lifecycle.drainAndUnpersist(spark, vertices, e)
-    out
   }
 
   /** PageRank over a directed edge list (`src`, `dst` — pass both
@@ -156,7 +148,7 @@ object Graph {
     val base = init * (dampDen - dampNum) / dampDen
     val (e, vertices) = edgeStatic(edges)
     // rank_i(v) = base + coalesce(__in_i(v), 0); round 1's rank is init
-    massRounds(e, vertices, withOutDegree(e), iters, dampNum, dampDen,
+    massRounds(vertices, withOutDegree(e), iters, dampNum, dampDen,
       c0 = s"${init}L DIV __d",
       c = s"(${base}L + coalesce(__in, 0L)) DIV __d",
       rankBase = lit(base))
@@ -191,8 +183,8 @@ object Graph {
     * `sum_y`, `sum_xy`, `sum_x2`, `sum_y2` LONG, `r` DOUBLE (NULL on
     * degenerate zero-variance graphs). */
   def assortativity(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().persist()
+    val e = Lifecycle.hold(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")).distinct())
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     // dst-side degree attaches with a LEFT join + coalesce(0): on the
     // documented symmetrized input every dst also appears as a src so
@@ -206,7 +198,7 @@ object Graph {
       .join(deg.select(col("node").as("dst"), col("d").as("__dy0")),
         Seq("dst"), "left_outer")
       .withColumn("__dy", coalesce(col("__dy0"), lit(0L)))
-    val out = withDeg.agg(
+    withDeg.agg(
         count(lit(1)).as("n_edges"),
         expr("CAST(sum(CAST(__dx AS DECIMAL(38,0))) AS BIGINT)").as("sum_x"),
         expr("CAST(sum(CAST(__dy AS DECIMAL(38,0))) AS BIGINT)").as("sum_y"),
@@ -220,9 +212,6 @@ object Graph {
           |      / (sqrt(CAST(n_edges * CAST(sum_x2 AS DECIMAL(38,0)) - CAST(sum_x AS DECIMAL(38,0)) * sum_x AS DOUBLE))
           |         * sqrt(CAST(n_edges * CAST(sum_y2 AS DECIMAL(38,0)) - CAST(sum_y AS DECIMAL(38,0)) * sum_y AS DOUBLE)))
           | END""".stripMargin))
-      .localCheckpoint(true)
-    Lifecycle.drainAndUnpersist(edges.sparkSession, e)
-    out
   }
 
   /** Weighted PageRank: [[pagerankMicro]] with per-edge weights — mass
@@ -252,15 +241,14 @@ object Graph {
     // one shuffle builds the static, as in [[edgeStatic]]: the
     // multigraph weight-sum's ClusteredDistribution(src, dst) is
     // satisfied by the CLUSTER BY src that runs first
-    val e = edges.select(col("src").cast("long").as("src"),
+    val e = Lifecycle.hold(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"),
         col("weight").cast("long").as("__w"))
       .filter(col("__w").isNotNull && col("__w") > 0)
       .repartition(col("src"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w"))
-      .persist()
+      .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w")))
     val wTot = e.groupBy(col("src")).agg(sum(col("__w")).as("__wt"))
-    massRounds(e, vertexSet(e, identity), e.join(wTot, "src"), iters, dampNum, dampDen,
+    massRounds(vertexSet(e, identity), e.join(wTot, "src"), iters, dampNum, dampDen,
       c0 = s"(CAST(${init} AS DECIMAL(38,0)) * __w) div __wt",
       c = s"(CAST(${base}L + coalesce(__in, 0L) AS DECIMAL(38,0)) * __w) div __wt",
       rankBase = lit(base))
@@ -304,7 +292,7 @@ object Graph {
         Seq("src"), "left")
       .select(col("src"), col("dst"), col("__d"),
         coalesce(col("__s"), lit(false)).as("__seed"))
-    massRounds(e, vertices, eDeg, iters, dampNum, dampDen,
+    massRounds(vertices, eDeg, iters, dampNum, dampDen,
       c0 = s"(CASE WHEN __seed THEN ${init}L ELSE 0L END) DIV __d",
       c = s"((CASE WHEN __seed THEN ${base}L ELSE 0L END) " +
         "+ coalesce(__in, 0L)) DIV __d",
@@ -360,11 +348,8 @@ object Graph {
     // write job itself (round 14), applied as a literal.
     //
     // The auth and hub chains interleave through ONE sink (each write
-    // is sized from the previous write's bytes), which keeps the last
-    // two rounds: a half-round's raw is dead once the same chain's next
-    // raw is written, and the final auth/hub raws stay until the
-    // densify below has read them.
-    val sink = Lifecycle.roundSink(edges.sparkSession, keep = 2)
+    // is sized from the previous write's bytes).
+    val sink = Lifecycle.roundSink(edges.sparkSession)
     def rescale(rawLazy: DataFrame): DataFrame = {
       val (raw, m) = sink.roundObserved(rawLazy, max(col("__raw")).as("__mx"))
       // null max ⇔ zero rows written ⇔ zero rows to scale; 1 avoids a
@@ -385,15 +370,11 @@ object Graph {
     }
     // densify ONCE: every vertex appears, absentees at 0 (exactly the
     // value the sparse frames implied all along)
-    val out = vertices
+    vertices
       .join(hubs.withColumnRenamed("score", "hub"), Seq("node"), "left")
       .join(auths.withColumnRenamed("score", "auth"), Seq("node"), "left")
       .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
-      .localCheckpoint(true)
-    sink.close() // the densify consumed the last raws
-    Lifecycle.drainAndUnpersist(edges.sparkSession, e, vertices)
-    out
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -418,7 +399,7 @@ object Graph {
     // Each round references the previous winners exactly once — the
     // 2^iters doubling an earlier join-to-labels form measured (26 s
     // for 3 rounds) came from a second reference per round.
-    val out = fixedRounds(edges.sparkSession, iters) { winners =>
+    fixedRounds(edges.sparkSession, iters) { winners =>
       val votes = winners.fold(
         e.select(col("src"), col("dst"), col("src").as("label"))) { w =>
         e.join(w, e("src") === w("node"), "left")
@@ -437,8 +418,6 @@ object Graph {
       vertices.join(winners, Seq("node"), "left")
         .select(col("node"), coalesce(col("__new"), col("node")).as("label"))
     }
-    Lifecycle.drainAndUnpersist(edges.sparkSession, e, vertices)
-    out
   }
 
   /** Exact triangle count + local clustering coefficient per node, by
@@ -486,31 +465,29 @@ object Graph {
     // AQE shuffle-stage reuse to deduplicate the identical repartition
     // subtrees did not reuse across the consumers at all — the
     // upstream edge construction re-executed per consumer (measured
-    // 14–50 s solo). persist() (MEMORY_AND_DISK) + eager output +
-    // unpersist is the stable form: the layout captured at persist
+    // 14–50 s solo). Holding them (MEMORY_AND_DISK, released at the
+    // query boundary) is the stable form: the layout captured at hold
     // time (CLUSTER BY + local sort) serves every consumer
-    // exchange-free, evicted blocks go to DISK instead of recomputing,
-    // and nothing outlives the call.
+    // exchange-free, and evicted blocks go to DISK instead of
+    // recomputing.
     //
     // canonical undirected edge set, keyed (a < b), clustered on `a`
     // so the degree aggregation and the a-side orientation join read
     // the cached layout exchange-free.
-    val und = edges
+    val und = Lifecycle.hold(edges
       .select(least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .repartition(p, col("a"))
-      .distinct()
-      .persist()
+      .distinct())
 
     // degrees are consumed THREE times (both orientation joins + the
-    // final join-back); 8 bytes × nodes — persist or each broadcast
+    // final join-back); 8 bytes × nodes — hold or each broadcast
     // recomputes the degree aggregation from scratch (measured 1.1 s
     // per recompute on the q103 graph)
-    val deg = und.select(col("a").as("node"))
+    val deg = Lifecycle.hold(und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .persist()
+      .groupBy(col("node")).agg(count(lit(1)).as("degree")))
 
     // orient by (degree, id): out-edge u→v iff (deg(u), u) < (deg(v), v)
     val withDeg = und
@@ -522,15 +499,14 @@ object Graph {
     // the intersection work per row is large, and byte-targeted AQE
     // coalescing would fold the shuffle into one or two partitions —
     // serializing exactly the work that needs the cluster. AQE does
-    // not re-coalesce a user repartition, and the persisted relation
+    // not re-coalesce a user repartition, and the held relation
     // reports this layout.
-    val oriented = withDeg.select(
+    val oriented = Lifecycle.hold(withDeg.select(
       when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
         struct(col("a").as("u"), col("b").as("v")))
         .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .repartition(p, col("u"))
-      .persist()
+      .repartition(p, col("u")))
 
     // EDGE-ITERATOR closing (adjacency intersection) instead of wedge
     // materialization: a wedge join emits O(Σd_out²) ROWS through an
@@ -542,13 +518,12 @@ object Graph {
     // has a unique orientation apex, so each is emitted ONCE at its
     // (u,v) edge. The adjacency table is O(m) total (out-degrees are
     // O(√m)-bounded by the orientation, so no row is a hub blob), built
-    // exchange-free on the persisted CLUSTER BY u layout; the first
+    // exchange-free on the held CLUSTER BY u layout; the first
     // attachment join is co-partitioned (zero exchange), and only the
     // second shuffles the edge frame by v with one neighbor array
     // aboard — O(m) rows either way, never O(Σd²).
-    val adj = oriented.groupBy(col("u"))
-      .agg(collect_list(col("v")).as("nbrs"))
-      .persist()
+    val adj = Lifecycle.hold(oriented.groupBy(col("u"))
+      .agg(collect_list(col("v")).as("nbrs")))
     val withA = oriented
       .join(adj.select(col("u").as("__au"), col("nbrs").as("__na")),
         col("u") === col("__au"))
@@ -563,19 +538,13 @@ object Graph {
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
 
-    val result = deg.join(perNode, Seq("node"), "left")
+    deg.join(perNode, Seq("node"), "left")
       .select(col("node"), col("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .withColumn("lcc",
         when(col("degree") < 2, lit(0.0))
           .otherwise((col("triangles") * 2L).cast("double") /
             (col("degree") * (col("degree") - 1L))))
-    // eager per-node materialization (one small row per vertex), then
-    // release the statics — same lifecycle as pagerankMicro
-    val out = result.localCheckpoint(true)
-    Lifecycle.drainAndUnpersist(edges.sparkSession,
-      adj, oriented, deg, und)
-    out
   }
 
   /** Connected components by alternating large-star / small-star
@@ -642,9 +611,7 @@ object Graph {
         .distinct()
     }
 
-    // `init` stays outside the sink's chain: the node-set union below
-    // still reads it. The returned frame reads the last round, so the
-    // sink is never closed.
+    // the returned frame reads `init` (the node set) and the last round
     val sink = Lifecycle.roundSink(pairs.sparkSession)
     var edges = init
     var sig = sigOf(m0)
@@ -706,16 +673,14 @@ object Graph {
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .distinct()
-    val adj = e.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-      .persist()
+    val adj = Lifecycle.hold(e.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
     // neighbor ARRAYS, one sorted long array per node — edges are
     // distinct so collect_list is duplicate-free; sorted for the merge
     // aggregate's sorted-distinct input contract
-    val nbrs = adj.groupBy(col("u"))
+    val nbrs = Lifecycle.hold(adj.groupBy(col("u"))
       .agg(sort_array(collect_list(col("v").cast("long"))).as("__nbrs"),
-        count(lit(1)).as("deg"))
-      .persist()
+        count(lit(1)).as("deg")))
     // ship each mid-node's array to its neighbors: O(m) rows through
     // the exchange, each carrying ONE deg(mid)-long array
     val shipped = adj.select(col("u"), col("v").as("__mid"))
@@ -731,13 +696,10 @@ object Graph {
       .agg(size(array_distinct(flatten(collect_list(col("__nbrs")))))
         .cast("long").as("reach2"))
       .select(col("u").as("node"), col("reach2"))
-    val out = nbrs.select(col("u").as("node"), col("deg"))
+    nbrs.select(col("u").as("node"), col("deg"))
       .join(reach, "node")
       .select(col("node"), col("deg"), col("reach2"))
       .orderBy("node")
-      .localCheckpoint(true)
-    Lifecycle.drainAndUnpersist(edges.sparkSession, nbrs, adj)
-    out
   }
 
   /** KMV-sketched two-hop reach — the dense-graph fallback
@@ -861,15 +823,15 @@ object Graph {
     // the adjacency static is LOOP-INTERNAL here (unlike
     // [[twoHopReachKmv]], whose returned lazy frame keeps reading its
     // adj): every hop's snapshot projects from an already-materialized
-    // sig round file, so adj can be a recomputable PERSIST released
-    // before returning (round 14) — one exchange builds it (CLUSTER BY
-    // u first; the symmetric-pair dedup's ClusteredDistribution(u,v) is
-    // satisfied by hash(u), and round 1's groupBy(u) reads the cached
-    // layout exchange-free), where the former diskRound staging paid a
-    // full write + per-consumer read-back of the edge set.
-    val adj = sym.select(col("a").as("u"), col("b").as("v"))
+    // sig round file, so adj is a recomputable held frame (round 14) —
+    // one exchange builds it (CLUSTER BY u first; the symmetric-pair
+    // dedup's ClusteredDistribution(u,v) is satisfied by hash(u), and
+    // round 1's groupBy(u) reads the cached layout exchange-free), where
+    // the former diskRound staging paid a full write + per-consumer
+    // read-back of the edge set.
+    val adj = Lifecycle.hold(sym.select(col("a").as("u"), col("b").as("v"))
       .unionAll(sym.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u")).distinct().persist()
+      .repartition(col("u")).distinct())
     def fh(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       xxhash64(c).bitwiseXOR(lit(Long.MinValue))
     val bk = graft.functions.Aggregators.bottomKDistinct(k)
@@ -891,8 +853,8 @@ object Graph {
     // coalesced to ceil(measured bytes / target) files — sketch state
     // is O(V·k) bytes regardless of cluster width, so the per-round
     // write stops paying `cores` tasks+files (the r13 anti-scaling).
-    // The sink keeps EVERY round: the returned union reads each hop's.
-    val sink = Lifecycle.roundSink(edges.sparkSession, keep = Int.MaxValue)
+    // The returned union reads every hop's round.
+    val sink = Lifecycle.roundSink(edges.sparkSession)
     var sig = sink.round(
       adj.select(col("u"), fh(col("v")).as("__h"))
         .groupBy(col("u")).agg(bk(col("__h")).as("__sig")))
@@ -915,10 +877,6 @@ object Graph {
       hops += snapshot(sig, t)
       t += 1
     }
-    // the returned union reads only the materialized sig round files —
-    // adj is dead once the loop ends; release after the async exchange
-    // jobs drain (see [[Lifecycle.drainAndUnpersist]])
-    Lifecycle.drainAndUnpersist(edges.sparkSession, adj)
     hops.reduce(_ unionByName _).orderBy("node", "hop")
   }
 
@@ -959,11 +917,9 @@ object Graph {
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .distinct(), nMetric)
-    // e0 joins the sink's chain without sizing its writes (round 1
-    // keeps the producer's layout); each round deletes the one it
-    // supersedes, and the returned frame reads the last
+    // e0 does not size the sink's writes (round 1 keeps the producer's
+    // layout); the returned frame reads the last round
     val sink = Lifecycle.roundSink(edges.sparkSession)
-    sink.adopt(e0)
     var e = e0
     var nEdges = nOf(m0)
     var i = 0

@@ -1,83 +1,70 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.storage.StorageLevel
 
-/** Cache-release discipline for operators that persist static frames
-  * for the duration of a call and release them before returning.
+/** The query scope: the one place operator state is materialized and
+  * released.
   *
-  * The naive lifecycle — `out = result.localCheckpoint(true);
-  * statics.unpersist()` — has a race under AQE: adaptive execution
-  * submits broadcast-exchange jobs on separate threads
-  * (`withThreadLocalCaptured` futures), and those jobs can still be
-  * running when the main action returns. If `unpersist()` then deletes
-  * the cached blocks mid-fetch, the in-flight task fails with
-  * `BlockNotFoundException` and its RETRY recomputes the block's full
-  * lineage with the cache gone — for an iterative operator that means
-  * re-running a multi-round recurrence from the raw tables, stealing
-  * every core from whatever query runs next (measured: a 7 s PageRank
-  * turning into 48 s with a 99 s run-to-run spread in the round-11
-  * driver bench, 16 `BlockNotFoundException` hits in the test logs).
+  * THE RULE. An operator that needs a frame computed once for several
+  * consumers either HOLDS it ([[hold]]: persisted, MEMORY_AND_DISK,
+  * recomputable from its lineage) or WRITES A ROUND ([[diskRound]],
+  * [[diskRoundObserved]], a [[RoundSink]]: parquet scratch whose
+  * read-back is a recomputable file scan). Both register with the
+  * session's scope. The operator releases nothing itself: its returned
+  * frame may stay lazy over everything it held or wrote. The query's
+  * owner — Bench and Verify between queries
+  * ([[graft.GraftSession.resetQueryState]]), perfbench before every
+  * pass, a service after each request — calls [[releaseDeferred]]
+  * once its action has returned. That boundary drains in-flight jobs
+  * once, unpersists every held frame and deletes every registered
+  * round. Nothing is unpersisted or deleted while the owner's action
+  * runs, so no task can read a block or a scratch file that a release
+  * removed under it.
   *
-  * [[drainAndUnpersist]] closes the race at the source: wait (bounded)
-  * until the session has no active jobs — our own action already
-  * returned, so the only stragglers are those async exchange jobs,
-  * which complete in milliseconds — THEN drop the blocks. The wait is
-  * bounded so a busy shared session degrades to today's behavior
-  * instead of hanging; the drain is skipped entirely when nothing is
-  * running (the common case: one poll, no sleep).
+  * CONTRACT. One query at a time per Spark application: the sessions of
+  * one SparkContext share its CacheManager and therefore one scope. A
+  * frame an operator returned is valid until its owner's next
+  * boundary; reading it after that recomputes held statics and fails
+  * loudly on a deleted round, never silently.
+  *
+  * OWNERS THAT RELEASE SYNCHRONOUSLY keep their own release, because
+  * their actions finish inside the call: `Ingest`'s parse cache
+  * (unpersisted after the merges that read it) and `Store`'s
+  * overwrite-own-input checkpoints.
+  *
+  * The `localCheckpoint` calls left in `src/main`, each with its reason
+  * (none exists to let a release run before returning):
+  *  - `Similarity.truncatedRecall` (`full`): the full-dimension top-k is
+  *    joined once per truncation dim; checkpointing runs it once.
+  *  - `Similarity.topComponent` (`m`, per-round `u`): dim²-row
+  *    covariance (the one corpus scan) and the power-iteration vector,
+  *    read twice per round (the max and the rescale).
+  *  - `IncrementalDedup.dedupeBatch` (`cand`): the tiny post-collision
+  *    candidate frame feeds both the corpus prune and the verify.
+  *  - `Profile.concentrationCurve` (`parted`): baked-in partition ids
+  *    that the offsets pass and the rank pass must agree on.
+  *  - `CorpusStats` cosine (`weights`, lazy `localCheckpoint(false)`):
+  *    the weight frame feeds both join sides and the norm aggregate.
+  *  - `Streams` dedup sink (`admitted`): one micro-batch written to
+  *    both the index and the corpus.
+  *  - `Store` (x4): a write that overwrites its own input must read a
+  *    copy (one also shares the kept rows with the emptied-dates pass).
+  *  - `Ingest` (`bad`): the quarantine rows, cut from the parse cache
+  *    the call unpersists before it returns.
+  *  - `Probes` q221's exact reach truth (x3): the audit's own bounded
+  *    recurrence, outside any operator.
   */
 private[graft] object Lifecycle {
 
   // ------------------------------------------------------------------
-  // SUBSTRATE POLICY (round 14) — where eager materialization lives:
-  //
-  //  1. Per-round LOOP state → one [[RoundSink]] per loop, parquet
-  //     scratch: recomputable file scans, never evictable
-  //     non-recomputable blocks. The sink owns the round lifecycle:
-  //     it holds the cut cadence (loops whose round references the
-  //     previous state exactly once COMPOSE LAZILY and cut lineage
-  //     every `spark.graft.round.cutEvery` rounds, default 8 — the
-  //     per-round write tax was 80–90 % of graph-family wall time),
-  //     deletes each superseded round once the next one is on disk,
-  //     and deletes the rounds it still holds when the caller closes
-  //     it. Loops keep no scratch frames of their own.
-  //  2. Mid-call STAGING read by several consumers (or whose baked-in
-  //     partition ids both passes must agree on) that SCALES WITH DATA
-  //     → [[diskRound]]. An evicted localCheckpoint block there is a
-  //     non-recomputable stage failure in the middle of an operator.
-  //  3. FINAL outputs handed to the caller (`out = ...localCheckpoint
-  //     (true); drainAndUnpersist(statics); out`) MAY stay
-  //     localCheckpoint: the block exists only between creation and
-  //     the caller's consumption (for every query path here, the very
-  //     next action); a loss in that window fails the job LOUDLY —
-  //     never a wrong result — and the bounded-cache session
-  //     ([[releaseDeferred]] at query boundaries) removes the storage
-  //     pressure that made such losses real in round 12. Same
-  //     exemption for corpus-size-INDEPENDENT frames (dim²-row /
-  //     KB-scale state), where a disk round-trip costs more than the
-  //     block can ever risk.
-  // ------------------------------------------------------------------
-
-  // ------------------------------------------------------------------
-  // Disk-backed per-round state (the round-13 substrate change).
-  //
-  // The iterative operators used to park each round's state in the
-  // block manager via `localCheckpoint(true)`. Local-checkpoint blocks
-  // are NON-RECOMPUTABLE by construction — the lineage is truncated at
-  // the checkpoint, so a block lost to memory-pressure eviction churn
-  // or an executor death is a failed stage and a rerun job, not a
-  // recompute (Spark logs it as "lineage truncated, cannot be
-  // recomputed"). On a loaded box that turned seconds-scale graph
-  // recurrences into minute-scale flaps; at 1000-executor scale it is
-  // a job killer. [[diskRound]] replaces the substrate: each round is
-  // written ONCE to a session-scoped parquet scratch path and read
-  // back — the round frames are O(V) rows of longs, so the write is a
-  // fast narrow job, and the read-back plan is recomputable FOREVER
-  // (a lost scan task just re-reads the file). Superseded rounds are
-  // deleted promptly ([[RoundSink]], [[releaseDiskRound]]); rounds the
-  // returned frame still reads live until the scratch root's
-  // shutdown-hook cleanup.
+  // Disk-backed round state. Local-checkpoint blocks are
+  // NON-RECOMPUTABLE: the lineage is truncated, so a block lost to
+  // eviction or an executor death fails the stage. A round is instead
+  // written ONCE to a session-scoped parquet scratch path and read back;
+  // round frames are O(V) rows of longs, so the write is a fast narrow
+  // job, and the read-back plan is a file scan a lost task just
+  // re-reads. Rounds are deleted at the owner's boundary.
   //
   // Cluster posture: the default scratch root is `java.io.tmpdir`,
   // correct for local[*] (one JVM, one filesystem). On a real cluster
@@ -90,6 +77,16 @@ private[graft] object Lifecycle {
   private val scratchRoots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val roundIds = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** What one application's current query has held and written, in
+    * registration order. */
+  private final class Scope {
+    val frames = new java.util.concurrent.ConcurrentLinkedDeque[DataFrame]()
+    val paths = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
+  }
+  private val scopes = new java.util.concurrent.ConcurrentHashMap[String, Scope]()
+  private def scope(spark: SparkSession): Scope =
+    scopes.computeIfAbsent(spark.sparkContext.applicationId, _ => new Scope)
 
   // ------------------------------------------------------------------
   // Substrate telemetry (round-13 optimization): cumulative wall time
@@ -113,9 +110,9 @@ private[graft] object Lifecycle {
     roundWriteNanosAcc.getAndSet(0L) / 1000000L,
     roundWritesAcc.getAndSet(0L))
 
-  /** Session-scoped scratch root (qualified URI string), created on
+  /** Application-scoped scratch root (qualified URI string), created on
     * first use and best-effort deleted when the JVM exits. */
-  private def scratchRoot(spark: SparkSession): String =
+  def scratchRoot(spark: SparkSession): String =
     scratchRoots.computeIfAbsent(spark.sparkContext.applicationId, _ => {
       val configured = spark.conf.getOption("spark.graft.scratch.dir")
         .getOrElse(new java.io.File(
@@ -132,6 +129,17 @@ private[graft] object Lifecycle {
       }, "graft-scratch-cleanup"))
       q.toString
     })
+
+  /** Persist `df` (MEMORY_AND_DISK) for the rest of the query: the way
+    * in for a static several consumers read. Released at the owner's
+    * [[releaseDeferred]]; until then the returned frame, and anything
+    * lazy over it, reads the cache. A plan the query already holds (the
+    * same edges under two graph calls) reuses that cache. */
+  def hold(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) df.persist()
+    scope(df.sparkSession).frames.push(df)
+    df
+  }
 
   /** Eagerly materialize a per-round frame to RELIABLE storage: one
     * parquet write (the only computation of `df`'s plan) + a read-back
@@ -151,7 +159,8 @@ private[graft] object Lifecycle {
     * and — through [[RoundSink]] — a measured-bytes coalesce so the
     * per-round file count follows the STATE size, not the cluster
     * width. Loops should prefer a [[RoundSink]]; this one-shot form is
-    * for statics and stage barriers. */
+    * for statics and stage barriers. The path is registered with the
+    * query scope and deleted at the owner's boundary. */
   def diskRound(df: DataFrame): DataFrame = writeRead(df, 0, Nil)._1
 
   /** [[diskRound]] plus observed metrics: the given aggregate columns
@@ -182,6 +191,8 @@ private[graft] object Lifecycle {
     val spark = df.sparkSession
     val id = roundIds.incrementAndGet()
     val path = s"${scratchRoot(spark)}/round-$id"
+    val p = new org.apache.hadoop.fs.Path(path)
+    scope(spark).paths.add(p)
     val sized = if (nFiles > 0) df.coalesce(nFiles) else df
     val obs =
       if (metrics.isEmpty) None else Some(new Observation(s"graft-round-$id"))
@@ -196,7 +207,6 @@ private[graft] object Lifecycle {
       .parquet(path)
     roundWriteNanosAcc.addAndGet(System.nanoTime() - t0)
     roundWritesAcc.incrementAndGet()
-    val p = new org.apache.hadoop.fs.Path(path)
     val bytes =
       try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
@@ -223,24 +233,15 @@ private[graft] object Lifecycle {
     * (bytes ≥ target × parallelism) keeps full width, so the setting is
     * scale-adaptive, not a local[32] constant.
     *
-    * The sink is also the loop's whole round lifecycle, so no operator
-    * decides cadence or deadness itself:
-    *  - [[cut]] decides whether round i is written or stays lazy, from
-    *    `spark.graft.round.cutEvery` (default 8; read nowhere else);
-    *  - every write deletes the chain's oldest round once more than
-    *    `keep` rounds are on disk — `keep` = 1 for a plain recurrence,
-    *    2 for two interleaved chains (HITS' auth/hub), unbounded when
-    *    the result reads every round (reach-profile hops);
-    *  - [[close]] deletes the rounds still held, once the caller's
-    *    output no longer reads them. A loop whose returned frame reads
-    *    its last round never closes; those files live until the
-    *    scratch root's shutdown cleanup. */
-  final class RoundSink private[Lifecycle] (spark: SparkSession, keep: Int) {
+    * The sink also holds the loop's cut cadence: [[cut]] decides
+    * whether round i is written or stays lazy, from
+    * `spark.graft.round.cutEvery` (default 8; read nowhere else). Every
+    * round it writes belongs to the query scope, like a [[diskRound]]. */
+  final class RoundSink private[Lifecycle] (spark: SparkSession) {
     private val target = spark.conf.getOption("spark.graft.round.targetFileBytes")
       .map(_.toLong).getOrElse(64L << 20)
     private val cutEvery = math.max(1, spark.conf
       .getOption("spark.graft.round.cutEvery").map(_.toInt).getOrElse(8))
-    private val live = scala.collection.mutable.Queue.empty[DataFrame]
     private var lastBytes = -1L
     private def files: Int =
       if (lastBytes < 0) 0
@@ -252,108 +253,41 @@ private[graft] object Lifecycle {
     def roundObserved(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
       val (out, bytes, m) = writeRead(df, files, metrics)
       if (bytes >= 0) lastBytes = bytes
-      adopt(out)
       (out, m)
     }
     /** Round `i` (1-based) of a lazily composing loop: written when `i`
       * falls on the cut cadence, else returned as the lazy plan. */
     def cut(i: Int, df: DataFrame): DataFrame =
       if (i % cutEvery == 0) round(df) else df
-    /** Make an already-materialized scratch frame the chain's newest
-      * round, so the sink deletes it like its own — without letting its
-      * bytes size the next write. */
-    def adopt(df: DataFrame): Unit = {
-      live.enqueue(df)
-      if (live.size > keep) releaseDiskRound(spark, live.dequeue())
-    }
-    /** The caller's output no longer reads the chain: delete its rounds. */
-    def close(): Unit = {
-      releaseDiskRound(spark, live.toSeq: _*)
-      live.clear()
-    }
   }
 
-  def roundSink(spark: SparkSession, keep: Int = 1): RoundSink =
-    new RoundSink(spark, keep)
+  def roundSink(spark: SparkSession): RoundSink = new RoundSink(spark)
 
-  /** Delete the scratch files behind superseded [[diskRound]] frames
-    * (a [[RoundSink]] calls this for its own chain). Only paths under
-    * this session's scratch root are ever touched (a caller accidentally
-    * passing a real table is a no-op), and a SHORT drain runs first so
-    * no straggling async-exchange task is mid-read when the file
-    * vanishes (a re-read retry after that would FileNotFound — the one
-    * non-recomputable window this substrate has, closed the way
-    * [[drainAndUnpersist]] closes it for cached blocks). Null frames are
-    * skipped. */
-  def releaseDiskRound(spark: SparkSession, frames: DataFrame*): Unit = {
-    val real = frames.filter(_ != null)
-    if (real.isEmpty) return
-    val root = scratchRoot(spark)
-    drain(spark, timeoutMs = 250L)
-    val conf = spark.sparkContext.hadoopConfiguration
-    real.foreach { df =>
-      try df.queryExecution.analyzed.foreach {
-        case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation => h.location.rootPaths.foreach { p =>
-            if (p.toString.startsWith(root))
-              try p.getFileSystem(conf).delete(p, true)
-              catch { case scala.util.control.NonFatal(_) => () }
-          }
-          case _ => ()
-        }
-        case _ => ()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Deferred cache release (round 14). Some operators persist a frame
-  // the RETURNED plan still reads lazily (globalRank's sorted frame),
-  // so they cannot unpersist before returning — and a Dataset.persist
-  // registers the plan in the session CacheManager, which holds the
-  // InMemoryRelation STRONGLY until an explicit unpersist: the
-  // ContextCleaner never frees SQL-cache entries, so without a release
-  // path every such call leaks a full-input MEMORY_AND_DISK cache for
-  // the session lifetime (the round-13 CacheManager-reuse finding).
-  // deferRelease registers the frame; releaseDeferred — called by the
-  // session owner at a query boundary (Bench between runs, Verify
-  // between queries; long-running services after each request) —
-  // drains and unpersists everything registered. Releasing is always
-  // CORRECTNESS-safe: the caches are recomputable plans, and ranks are
-  // invariant to the re-executed range partitioning (any valid range
-  // split + in-partition sort of a total order yields the same global
-  // rank), so a consumer that reads after release recomputes, slower
-  // but identical.
-  // ------------------------------------------------------------------
-  private val deferredCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Register a persisted frame whose cache outlives its operator call;
-    * released at the next [[releaseDeferred]]. */
-  def deferRelease(df: DataFrame): Unit = deferredCaches.add(df)
-
-  /** Drain in-flight jobs, then unpersist every frame registered with
-    * [[deferRelease]]. Bounds the session's cache footprint to one
-    * query's worth — call at query boundaries. */
+  /** The query boundary, the scope's one way out: once the owner's
+    * action has returned, drain the session's in-flight jobs (stragglers
+    * such as AQE's async broadcast exchanges), then unpersist every
+    * held frame, newest first, and delete every registered round. With
+    * nothing held or written it returns at once, without polling.
+    * Releasing is always correctness-safe for held frames (recomputable
+    * plans); a deleted round makes a later read of a frame over it fail
+    * loudly. */
   def releaseDeferred(spark: SparkSession): Unit = {
-    if (deferredCaches.isEmpty) return
-    drain(spark, timeoutMs = 2000L)
-    var df = deferredCaches.poll()
+    val s = scope(spark)
+    if (s.frames.isEmpty && s.paths.isEmpty) return
+    drain(spark)
+    var df = s.frames.pollFirst()
     while (df != null) {
       try df.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
-      df = deferredCaches.poll()
+      df = s.frames.pollFirst()
     }
-  }
-
-  /** Unpersist `frames` once the session's in-flight jobs have drained
-    * (bounded wait), so no straggler task can observe the blocks
-    * disappearing mid-read. Call AFTER the operator's output has been
-    * eagerly materialized — the caches must not be load-bearing for
-    * the returned frame. */
-  def drainAndUnpersist(spark: SparkSession, frames: DataFrame*): Unit = {
-    drain(spark)
-    frames.foreach(_.unpersist(blocking = false))
+    val conf = spark.sparkContext.hadoopConfiguration
+    var p = s.paths.poll()
+    while (p != null) {
+      try p.getFileSystem(conf).delete(p, true)
+      catch { case scala.util.control.NonFatal(_) => () }
+      p = s.paths.poll()
+    }
   }
 
   /** Bounded wait for session quiescence (no active jobs), required
@@ -362,15 +296,12 @@ private[graft] object Lifecycle {
     * job may linger (harmless — lengthens the wait) and a just-started
     * job may not be visible yet (dangerous — a single empty poll could
     * release blocks under it). The double poll covers the start-lag
-    * window; the residual race is additionally BOUNDED by the callers'
-    * per-round checkpoints — with flat lineage the worst recompute a
-    * leaked straggler can trigger is one round over persisted statics,
-    * never a multi-round rebuild. On a busy shared session the wait
-    * gives up at `timeoutMs` and degrades to the pre-drain behavior. */
-  def drain(spark: SparkSession, timeoutMs: Long = 10000L): Unit = {
+    * window. On a busy shared session the wait gives up after 2 s and
+    * releases anyway. */
+  private def drain(spark: SparkSession): Unit = {
     val tracker = spark.sparkContext.statusTracker
     val t0 = System.nanoTime()
-    val deadline = t0 + timeoutMs * 1000000L
+    val deadline = t0 + 2000L * 1000000L
     var emptyStreak = 0
     while (emptyStreak < 2 && System.nanoTime() < deadline) {
       if (tracker.getActiveJobIds().isEmpty) {

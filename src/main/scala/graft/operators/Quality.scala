@@ -453,8 +453,11 @@ object Quality {
     * (map-side combined), left-joined from the 9-row expectation spine
     * — digits with zero support still appear. The preserved side of a
     * left outer join can never be the build side, so the ≤9-row digit
-    * aggregate is the one broadcast. Non-positive and
-    * null values are excluded (Benford is defined on positive
+    * aggregate is the one broadcast. The total is a window sum over
+    * the 9 joined rows, not a second aggregate of the input, so the
+    * input is scanned and aggregated once (every positive value's first
+    * digit is 1–9, so the spine carries every counted row). Non-positive
+    * and null values are excluded (Benford is defined on positive
     * magnitudes).
     *
     * Output: `digit` INT, `n` LONG, `obs_ppm` LONG (0 when no
@@ -474,12 +477,13 @@ object Quality {
       .withColumn("digit",
         expr("CAST(__v DIV CAST(power(10, length(CAST(__v AS STRING)) - 1) AS BIGINT) AS INT)"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-    val total = digits.agg(coalesce(sum(col("n")), lit(0L)).as("__t"))
     spine
       .join(digits, Seq("digit"), "left_outer")
-      .crossJoin(broadcast(total))
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
-        when(col("__t") > 0L, expr("(1000000L * coalesce(n, 0L)) DIV __t"))
+        col("benford_ppm"))
+      .withColumn("__t", sum(col("n")).over(Window.partitionBy()))
+      .select(col("digit"), col("n"),
+        when(col("__t") > 0L, expr("(1000000L * n) DIV __t"))
           .otherwise(lit(0L)).as("obs_ppm"),
         col("benford_ppm"))
       .withColumn("dev_ppm", abs(col("obs_ppm") - col("benford_ppm")))

@@ -408,8 +408,8 @@ object Relational {
     * The counts pass and the rank pass MUST see the same physical
     * partitioning (range bounds come from sampling, and a second
     * sampling could legally draw different bounds). Both passes read
-    * ONE persisted frame — the range exchange, in-partition sort, and
-    * per-partition row id materialized together: `persist()`
+    * ONE held frame — the range exchange, in-partition sort, and
+    * per-partition row id materialized together: the cache
     * substitutes a single InMemoryRelation into both branches, so the
     * shuffle (and its sampling) happens exactly once, the partition
     * count is pinned explicitly (REPARTITION_BY_NUM, which AQE never
@@ -435,16 +435,14 @@ object Relational {
     * row position, so `mid − (pid << 33)` is the 0-based position in
     * the sorted partition — no window, no extra exchange. Tasks are
     * bounded to 2³³ rows each (≈ 8.6 B — far past any sane partition).
-    * The cache cannot be unpersisted here (the returned frame reads it
-    * lazily), and the CacheManager holds it STRONGLY until an explicit
-    * unpersist — the ContextCleaner never frees SQL-cache entries — so
-    * it is registered with [[Lifecycle.deferRelease]] and freed at the
-    * session owner's next [[Lifecycle.releaseDeferred]] query boundary
-    * (Bench between timed runs, Verify between queries). Releasing
-    * early is safe: the cache is a recomputable plan, and the rank is
-    * invariant to the re-executed range partitioning (any valid range
-    * split + in-partition sort of a total order yields the same global
-    * position), so a post-release read recomputes the same ranks.
+    * The cache is held ([[Lifecycle.hold]]): the returned frame reads it
+    * lazily, and the owner's [[Lifecycle.releaseDeferred]] query
+    * boundary frees it (the ContextCleaner never frees SQL-cache
+    * entries). Releasing early is safe: the cache is a recomputable
+    * plan, and the rank is invariant to the re-executed range
+    * partitioning (any valid range split + in-partition sort of a total
+    * order yields the same global position), so a post-release read
+    * recomputes the same ranks.
     *
     * `keys` must be a TOTAL order (include a tiebreaker); ties would
     * make ranks nondeterministic across runs. */
@@ -455,13 +453,9 @@ object Relational {
     // output (decileLift reads it twice, AP chains two ranks) then
     // pays only a narrow projection + broadcast join per read — never
     // a re-sort
-    val sorted = df.repartitionByRange(n, keys: _*)
+    val sorted = Lifecycle.hold(df.repartitionByRange(n, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .persist()
-    // bounded cache lifecycle: released at the session owner's next
-    // releaseDeferred() boundary (see scaladoc — safe and exact)
-    Lifecycle.deferRelease(sorted)
+      .withColumn("__mid", monotonically_increasing_id()))
     val offsets = sorted
       .select(shiftright(col("__mid"), 33).cast("int").as("__pid"))
       .groupBy(col("__pid"))

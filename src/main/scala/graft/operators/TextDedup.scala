@@ -281,30 +281,28 @@ object TextDedup {
     // sides, so the shingle expression would run three times per doc if
     // each consumer recomputed it (measured: ~30% wall saved at 1×/4×
     // sweep scale; neutral at 16× where the candidate join dominates).
-    // persist() is the materialization point — the q103/graph-tier
+    // Lifecycle.hold is the materialization point — the q103/graph-tier
     // discipline. The round-11 form relied on AQE shuffle-stage reuse
     // across the three consumers of one id-keyed repartition, but (the
     // q103 SCALING.md finding, reconfirmed by the round-11 driver
     // bench: 4.55 s vs 1.26 s budget with a 51 s spread) AQE does NOT
     // reliably deduplicate identical repartition subtrees across
-    // consumers — each re-shingled the corpus. The persisted relation
-    // serves all consumers from MEMORY_AND_DISK, the id-keyed CLUSTER
-    // BY layout below survives into the cache so the verification
-    // joins read it exchange-free, and the cache is released (after
-    // the session's async exchange jobs drain) before returning.
+    // consumers — each re-shingled the corpus. The held relation
+    // serves all consumers from MEMORY_AND_DISK, and the id-keyed
+    // CLUSTER BY layout below survives into the cache so the
+    // verification joins read it exchange-free.
     // Storage is one (id, shingle-set) row per doc — the same linear
     // class as the token shuffle below.
     // hashed shingle tokens: PPJoin's prefix filter is EXACT under any
     // consistent global token order (the df-ascending order just makes
     // prefixes rare-token-first), so hashed longs change neither the
     // pair set nor any Jaccard — only the allocation profile
-    val shf = spread(docs)
+    val shf = Lifecycle.hold(spread(docs)
       .select(col(idCol).as("__id"),
         HashExprs.hashedShingles(spark, col(textCol), shingleN).as("sh"))
       .withColumn("__sz", size(col("sh")))
       .filter(col("__sz") > 0) // shingle-less docs have no defined Jaccard
-      .repartition(spark.sparkContext.defaultParallelism, col("__id"))
-      .persist()
+      .repartition(spark.sparkContext.defaultParallelism, col("__id")))
     val toks = shf.select(col("__id"), col("__sz"), explode(col("sh")).as("__tok"))
 
     // global document frequency per token (shingles are distinct per doc,
@@ -330,13 +328,8 @@ object TextDedup {
       .distinct()
 
     val shNamed = shf.select(col("__id").as(idCol), col("sh"))
-    // eager output (near-dup pairs — small), then drained release of
-    // the shingle cache: the [[graft.operators.Lifecycle]] contract
-    val out = jaccardVerifyOnShingles(candidates, shNamed, shNamed, idCol)
+    jaccardVerifyOnShingles(candidates, shNamed, shNamed, idCol)
       .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
-    Lifecycle.drainAndUnpersist(spark, shf)
-    out
   }
 
   /** Connected components over a near-dup pair graph — TRANSITIVE dedup:
@@ -354,17 +347,17 @@ object TextDedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // the edge static is LOOP-INTERNAL (the returned frame is a view
     // over the LAST round's disk file, and every round is eagerly
-    // written), so it can be a recomputable PERSIST released before
-    // returning (round 14) rather than a diskRound write+read. ONE
+    // written), so it is a recomputable held frame (round 14) rather
+    // than a diskRound write+read. ONE
     // exchange builds it: CLUSTER BY src first — the symmetric-pair
     // dedup's ClusteredDistribution(src,dst) is satisfied by hash(src)
     // — and each round's min-label aggregation (groupBy src over a
     // broadcast-probe join that preserves the cached layout) then runs
     // exchange-free.
-    val edges =
+    val edges = Lifecycle.hold(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .repartition(col("src")).distinct().persist()
+        .repartition(col("src")).distinct())
     // round-0 labels stay LAZY (a distinct projection of the cached
     // edges — exchange-free on the clustering): round 1's write job is
     // the first and only consumer, so a separate round-0 disk write
@@ -375,10 +368,9 @@ object TextDedup {
     // one round: labels' comp drops to min over itself + neighbors; the
     // OLD label rides along so convergence is a filter over the already
     // materialized result, not another join. Each round's disk
-    // write truncates lineage; superseded rounds' scratch files
-    // are deleted as the loop advances, and the label set is
-    // O(|docs in ≥1 pair|) — small next to the corpus — so peak scratch
-    // across rounds stays modest.
+    // write truncates lineage; the label set is O(|docs in ≥1 pair|) —
+    // small next to the corpus — so the rounds the query keeps until
+    // its boundary stay modest.
     def propagateLazy(cur: DataFrame): DataFrame = {
       val nbrMin = edges
         .join(cur.select(col("id").as("dst"), col("comp").as("nbr_comp")), "dst")
@@ -396,8 +388,7 @@ object TextDedup {
     // filter+count action re-scanned every just-written round file
     val changedMetric = coalesce(sum(when(col("comp") =!= col("old"), 1L)
       .otherwise(0L)), lit(0L)).as("__changed")
-    // the sink deletes each superseded round; the returned frame is a
-    // view over the LAST round only, so the sink is never closed
+    // the returned frame is a view over the LAST round only
     val sink = Lifecycle.roundSink(pairs.sparkSession)
     var iter = 0
     var converged = false
@@ -418,10 +409,6 @@ object TextDedup {
     }
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds — component diameter exceeds the bound")
-    // the returned view reads only the last round's disk file; the edge
-    // cache is dead once convergence (incl. the confirmation pass) is
-    // decided
-    Lifecycle.drainAndUnpersist(pairs.sparkSession, edges)
     labels.select(col("id"), col("comp").as("component"))
   }
 

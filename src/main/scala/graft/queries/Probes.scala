@@ -1787,7 +1787,7 @@ object Probes {
       val batch = docs.filter(col("doc_id") % 20 === 0 && col("doc_id") < 300)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(col("text"), lit(" incremental batch suffix")).as("text"))
-      val dir = sys.props("java.io.tmpdir") + "/graft_q61_index"
+      val dir = freshDir(s, "graft_q61_index")
       IncrementalDedup.writeIndex(docs, dir)
       val dups = IncrementalDedup.dedupeBatch(batch, docs, dir, threshold = 0.5)
 
@@ -1849,7 +1849,7 @@ object Probes {
       val batch = docs.filter(col("doc_id") % 20 === 0 && col("doc_id") < 300)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(col("text"), lit(" incremental batch suffix")).as("text"))
-      val dir = sys.props("java.io.tmpdir") + "/graft_q61_index_bench"
+      val dir = freshDir(s, "graft_q61_index_bench")
       IncrementalDedup.writeIndex(docs, dir)
       IncrementalDedup.dedupeBatch(batch, docs, dir, threshold = 0.5)
     }
@@ -6935,7 +6935,7 @@ object Probes {
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val bits = annBits(emb)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q225_lsh_index"
+      val dir = freshDir(s, "graft_q225_lsh_index")
       Similarity.writeLshIndex(emb, dir, bits, dim = 64)
       val persisted = Similarity.searchLshIndex(s, dir, queries, k = 5,
         bits = bits, dim = 64, nProbe = 4)
@@ -6965,7 +6965,7 @@ object Probes {
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val bits = annBits(emb)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q225_lsh_index_b"
+      val dir = freshDir(s, "graft_q225_lsh_index_b")
       Similarity.writeLshIndex(emb, dir, bits, dim = 64)
       Similarity.searchLshIndex(s, dir, queries, k = 5, bits = bits,
           dim = 64, nProbe = 4)
@@ -11436,7 +11436,7 @@ object Probes {
       val queries = emb.filter(col("vec_id") % 17 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val bits = annBits(emb)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q294_stale_index"
+      val dir = freshDir(s, "graft_q294_stale_index")
       Similarity.writeLshIndex(snapshot, dir, bits, dim = 64)
       Similarity.indexStaleness(s, dir, emb, queries, k = 10,
           bits = bits, dim = 64)
@@ -11457,7 +11457,7 @@ object Probes {
       val queries = emb.filter(col("vec_id") % 17 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val bits = annBits(emb)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q294_stale_b"
+      val dir = freshDir(s, "graft_q294_stale_b")
       Similarity.writeLshIndex(emb.filter(col("vec_id") % 2 === 0),
         dir, bits, dim = 64)
       Similarity.indexStaleness(s, dir, emb, queries, k = 10,
@@ -11492,7 +11492,7 @@ object Probes {
       val inMem = Similarity.ivfPqTopK(emb, queries, k = 10, nCells = 8,
         nProbe = 3, m = 8, kCodes = 16, dim = 64, cents, cbs,
         shortlist = 48)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q295_ivfpq_index"
+      val dir = freshDir(s, "graft_q295_ivfpq_index")
       Similarity.writeIvfPqIndex(emb, dir, nCells = 8, dim = 64, m = 8,
         kCodes = 16, cents, cbs)
       val persisted = Similarity.searchIvfPqIndex(s, dir, queries,
@@ -11542,7 +11542,7 @@ object Probes {
       val queries = emb.filter(col("vec_id") % 13 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val (cents, cbs) = ivfPqTrainStage(s, d)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q295_ivfpq_b"
+      val dir = freshDir(s, "graft_q295_ivfpq_b")
       Similarity.writeIvfPqIndex(emb, dir, nCells = 8, dim = 64, m = 8,
         kCodes = 16, cents, cbs)
       Similarity.searchIvfPqIndex(s, dir, queries, k = 10, nProbe = 3,
@@ -11802,9 +11802,8 @@ object Probes {
       val queries = emb.filter(col("vec_id") % 13 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val (cents, cbs) = ivfPqTrainStage(s, d)
-      val tmp = sys.props("java.io.tmpdir")
-      val incDir = tmp + "/graft_q301_ivfpq_inc"
-      val fullDir = tmp + "/graft_q301_ivfpq_full"
+      val incDir = freshDir(s, "graft_q301_ivfpq_inc")
+      val fullDir = freshDir(s, "graft_q301_ivfpq_full")
       Similarity.writeIvfPqIndex(emb.filter(col("vec_id") % 2 === 0),
         incDir, nCells = 8, dim = 64, m = 8, kCodes = 16, cents, cbs)
       Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 2 =!= 0),
@@ -11836,7 +11835,7 @@ object Probes {
       import graft.operators.Similarity
       val emb = Tables.embeddings(s, d)
       val (cents, cbs) = ivfPqTrainStage(s, d)
-      val dir = sys.props("java.io.tmpdir") + "/graft_q301_ivfpq_b"
+      val dir = freshDir(s, "graft_q301_ivfpq_b")
       Similarity.writeIvfPqIndex(emb.filter(col("vec_id") % 2 === 0),
         dir, nCells = 8, dim = 64, m = 8, kCodes = 16, cents, cbs)
       Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 2 =!= 0),
@@ -11863,7 +11862,7 @@ object Probes {
       val upd = o.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), (col("o_totalprice") + 1000.0).as("o_totalprice"))
       val sink = Store.ParquetSnapshotSink(
-        sys.props("java.io.tmpdir") + "/graft_q302_target")
+        freshDir(s, "graft_q302_target"))
       sink.overwriteAll(base)
       SqlMerge.register(s, "q302_target", sink)
       upd.createOrReplaceTempView("q302_source")
@@ -11896,7 +11895,7 @@ object Probes {
       val base = o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val sink = Store.ParquetSnapshotSink(
-        sys.props("java.io.tmpdir") + "/graft_q303_target")
+        freshDir(s, "graft_q303_target"))
       sink.overwriteAll(base)
       SqlMerge.register(s, "q303_target", sink)
       o.filter(col("o_orderkey") % 3 === 0)
@@ -11934,7 +11933,7 @@ object Probes {
       val base = o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
       val sink = Store.ParquetSnapshotSink(
-        sys.props("java.io.tmpdir") + "/graft_q304_target")
+        freshDir(s, "graft_q304_target"))
       sink.overwriteAll(base)
       SqlMerge.register(s, "q304_target", sink)
       o.filter(col("o_orderkey") % 3 === 0)
@@ -11986,7 +11985,7 @@ object Probes {
       val base = o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
       val sink = Store.ParquetSnapshotSink(
-        sys.props("java.io.tmpdir") + "/graft_q315_target")
+        freshDir(s, "graft_q315_target"))
       sink.overwriteAll(base)
       SqlMerge.register(s, "q315_target", sink)
       o.filter(col("o_orderkey") % 3 === 0)
@@ -12032,7 +12031,7 @@ object Probes {
       val base = o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
       val sink = Store.ParquetSnapshotSink(
-        sys.props("java.io.tmpdir") + "/graft_q305_target")
+        freshDir(s, "graft_q305_target"))
       sink.overwriteAll(base)
       SqlMerge.register(s, "q305_target", sink)
       s.sql(
@@ -12060,7 +12059,7 @@ object Probes {
       val base = o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val sink = Store.ParquetSnapshotSink(
-        sys.props("java.io.tmpdir") + "/graft_q306_target")
+        freshDir(s, "graft_q306_target"))
       sink.overwriteAll(base)
       SqlMerge.register(s, "q306_target", sink)
       s.sql("DELETE FROM q306_target WHERE o_totalprice > 200000.0")
@@ -12095,7 +12094,7 @@ object Probes {
             (col("o_orderkey") % 30).cast("int")).as("dt"),
           col("o_totalprice"))
       val sink = TxnParquetSink(
-        sys.props("java.io.tmpdir") + "/graft_q307_target", tsCol = "dt")
+        freshDir(s, "graft_q307_target"), tsCol = "dt")
       sink.overwriteAll(base)
       SqlMerge.register(s, "q307_target", sink)
       // touches 5 of the 30 dates; the other 25 stay byte-identical
@@ -12135,12 +12134,7 @@ object Probes {
         .select(col("o_orderkey"), dt30,
           (col("o_totalprice") + 1000.0).as("o_totalprice"))
       // fresh dir each run: version numbers are the fixture's contract
-      val dir = sys.props("java.io.tmpdir") + "/graft_q308_target"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete(); ()
-      }
-      rmrf(new java.io.File(dir))
+      val dir = freshDir(s, "graft_q308_target")
       val sink = TxnParquetSink(dir, tsCol = "dt")
       sink.overwriteAll(base) // manifest v1
       SqlMerge.register(s, "q308_target", sink)
@@ -12164,17 +12158,19 @@ object Probes {
            |ORDER BY o_orderkey""".stripMargin)
   )
 
-  /** Fresh fixture dir for version-numbered transactional probes (the
-    * commit counter is part of the fixture's contract — a stale dir from
-    * an earlier run would shift every version). */
-  private def freshDir(name: String): String = {
-    val dir = sys.props("java.io.tmpdir") + s"/$name"
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(dir))
-    dir
+  /** Empty fixture dir for a probe that writes a table, under the
+    * application's scratch root ([[graft.operators.Lifecycle.scratchRoot]],
+    * deleted when the JVM exits), so two JVMs on one machine never share
+    * a target. Emptied on every call: for the version-numbered
+    * transactional probes the commit counter is part of the fixture's
+    * contract, and a stale dir would shift every version. A local root
+    * is returned as a plain path for the sinks that use java.io. */
+  private def freshDir(s: SparkSession, name: String): String = {
+    val p = new org.apache.hadoop.fs.Path(
+      graft.operators.Lifecycle.scratchRoot(s), name)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    if (fs.getScheme == "file") p.toUri.getPath else p.toString
   }
 
   /** S4 against the DELTA-PROTOCOL sink (SURVEY §2.1 S4 names
@@ -12197,7 +12193,7 @@ object Probes {
       val upd = o.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), dt30,
           (col("o_totalprice") + 1000.0).as("o_totalprice"))
-      val sink = DeltaDateSink(freshDir("graft_q309_target"), tsCol = "dt")
+      val sink = DeltaDateSink(freshDir(s, "graft_q309_target"), tsCol = "dt")
       sink.overwriteAll(base)
       SqlMerge.register(s, "q309_target", sink)
       upd.createOrReplaceTempView("q309_source")
@@ -12239,7 +12235,7 @@ object Probes {
           date_add(lit(java.sql.Date.valueOf("2024-01-01")),
             (col("o_orderkey") % 30).cast("int")).as("dt"),
           col("o_totalprice"))
-      val sink = DeltaDateSink(freshDir("graft_q310_target"), tsCol = "dt")
+      val sink = DeltaDateSink(freshDir(s, "graft_q310_target"), tsCol = "dt")
       sink.overwriteAll(base)
       SqlMerge.register(s, "q310_target", sink)
       // touches 5 of the 30 dates; the other 25 keep their files
@@ -12273,7 +12269,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val dir = freshDir("graft_q311_target")
+      val dir = freshDir(s, "graft_q311_target")
       val txn = TxnParquet.TxnParquetSink(dir, tsCol = "dt")
       txn.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice")))
@@ -12312,7 +12308,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val dir = freshDir("graft_q316_target")
+      val dir = freshDir(s, "graft_q316_target")
       val txn = TxnParquet.TxnParquetSink(dir, tsCol = "dt")
       txn.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice")))
@@ -12354,7 +12350,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val dir = freshDir("graft_q317_target")
+      val dir = freshDir(s, "graft_q317_target")
       val txn = TxnParquet.TxnParquetSink(dir, tsCol = "dt")
       txn.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice")))
@@ -12402,7 +12398,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val dir = freshDir("graft_q318_target")
+      val dir = freshDir(s, "graft_q318_target")
       val txn = TxnParquet.TxnParquetSink(dir, tsCol = "dt")
       txn.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice")))
@@ -12439,7 +12435,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val dir = freshDir("graft_q319_target")
+      val dir = freshDir(s, "graft_q319_target")
       val txn = TxnParquet.TxnParquetSink(dir, tsCol = "dt")
       txn.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice")))
@@ -12479,7 +12475,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val sink = DeltaDateSink(freshDir("graft_q312_target"), tsCol = "dt")
+      val sink = DeltaDateSink(freshDir(s, "graft_q312_target"), tsCol = "dt")
       sink.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice"))) // v0
       SqlMerge.register(s, "q312_target", sink)
@@ -12518,7 +12514,7 @@ object Probes {
       val o = Tables.orders(s, d)
       val dt30 = date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         (col("o_orderkey") % 30).cast("int")).as("dt")
-      val dir = freshDir("graft_q314_target")
+      val dir = freshDir(s, "graft_q314_target")
       val sink = DeltaDateSink(dir, tsCol = "dt")
       sink.overwriteAll(o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), dt30, col("o_totalprice"))) // v0

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Inter-annotator agreement: hand-computed κ tables, chance-degenerate
   * NULLs, quarantine visibility, layout independence. */
-class AgreementSpec extends AnyFunSuite {
+class AgreementSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import java.sql.{Date, Timestamp}
 import graft.SharedSpark
 
 /** Cohort retention + funnel semantics on hand-built event fixtures. */
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** Market-basket pair counts + lift on hand-built baskets. */
-class AssocSpec extends AnyFunSuite {
+class AssocSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

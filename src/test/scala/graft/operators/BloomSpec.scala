@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class BloomSpec extends AnyFunSuite {
+class BloomSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   test("no false negatives: pruned frame is a superset of the exact semi-join") {

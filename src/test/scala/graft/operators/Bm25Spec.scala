@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** BM25 semantics against an independent driver-side reimplementation
   * on a hand-built corpus. */
-class Bm25Spec extends AnyFunSuite {
+class Bm25Spec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Domain boilerplate mining/stripping: threshold algebra, presence (not
   * occurrence) counting, order-preserving reassembly, degenerate docs. */
-class BoilerplateSpec extends AnyFunSuite {
+class BoilerplateSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

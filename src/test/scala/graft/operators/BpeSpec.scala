@@ -7,7 +7,7 @@ import graft.SharedSpark
 import graft.plans.TextExprs
 
 /** BPE training determinism and reference↔native encoder agreement. */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

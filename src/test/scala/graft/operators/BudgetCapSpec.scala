@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Token-budget prefix admission: strict prefix semantics (no
   * back-fill), append monotonicity, layout independence. */
-class BudgetCapSpec extends AnyFunSuite {
+class BudgetCapSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -8,7 +8,7 @@ import graft.SharedSpark
 /** Large-star/small-star connected components: equivalence with the
   * min-label implementation on varied topologies, long-path handling
   * beyond the label-propagation bound, empty/degenerate inputs. */
-class CcStarSpec extends AnyFunSuite {
+class CcStarSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

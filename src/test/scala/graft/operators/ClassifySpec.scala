@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Integer likelihood-ratio classifier: hand-computed weights, unseen-term
   * backoff, separation on a synthetic two-class corpus, degenerate docs. */
-class ClassifySpec extends AnyFunSuite {
+class ClassifySpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

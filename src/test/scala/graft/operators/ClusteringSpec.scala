@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Micro-unit k-means: separation of obvious clusters, determinism under
   * layout, Lloyd descent, empty-cluster survival, centroid audit. */
-class ClusteringSpec extends AnyFunSuite {
+class ClusteringSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Quality-aware dedup representatives: best-of-cluster selection,
   * ties, singletons, null quality. */
-class DedupRepsSpec extends AnyFunSuite {
+class DedupRepsSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

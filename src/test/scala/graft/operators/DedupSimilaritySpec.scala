@@ -9,7 +9,7 @@ import graft.functions.Vectors
 
 /** MinHash/SimHash/ANN behavior on the real corpus (sf0.001: 500 docs with
   * planted near-duplicates, 500 64-dim embeddings). */
-class DedupSimilaritySpec extends AnyFunSuite {
+class DedupSimilaritySpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
   def docs = Tables.documents(spark, SharedSpark.sf0001)

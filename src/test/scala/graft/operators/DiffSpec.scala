@@ -8,7 +8,7 @@ import graft.SharedSpark
 /** Column-attributed diff: status classification, per-column flags,
   * null-safe semantics, summary partition identity, layout
   * independence. */
-class DiffSpec extends AnyFunSuite {
+class DiffSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

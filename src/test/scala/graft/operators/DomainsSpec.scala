@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** Host extraction and per-domain cap semantics. */
-class DomainsSpec extends AnyFunSuite {
+class DomainsSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Cross-document duplicate-passage stats: window construction, the
   * distinct-docs rule, short-doc handling. */
-class DupPassagesSpec extends AnyFunSuite {
+class DupPassagesSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** RRF fusion: hand-computed contributions, tie rules, topK, and
   * independence from input-list row order. */
-class FusionSpec extends AnyFunSuite {
+class FusionSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** Fieldwise survivorship merge semantics. */
-class GoldenSpec extends AnyFunSuite {
+class GoldenSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

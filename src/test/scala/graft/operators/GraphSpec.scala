@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** Integer PageRank: hand-computed recurrence, symmetry, determinism. */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

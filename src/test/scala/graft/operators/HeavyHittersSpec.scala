@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class HeavyHittersSpec extends AnyFunSuite {
+class HeavyHittersSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   // 3 heavies buried in a sea of uniques: "hot" 500x, "warm" 300x,

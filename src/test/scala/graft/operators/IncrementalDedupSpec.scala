@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   private def tmpDir() =

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Bigram LM: pair extraction, MLE counts, and the integer ppm score
   * recurrence on hand-computed corpora. */
-class LangModelSpec extends AnyFunSuite {
+class LangModelSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   test("zValue interleaves bits (hand-computed cases)") {

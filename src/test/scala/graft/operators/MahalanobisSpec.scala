@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Diagonal-Mahalanobis outlier scores: hand moments, constant-dim
   * exclusion, drop contract, tie order, layout independence. */
-class MahalanobisSpec extends AnyFunSuite {
+class MahalanobisSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

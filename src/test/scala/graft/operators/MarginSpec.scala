@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Margin-based kNN: agreement with an independent driver-side
   * reference, hub demotion, layout independence. */
-class MarginSpec extends AnyFunSuite {
+class MarginSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -8,7 +8,7 @@ import graft.SharedSpark
 /** MMR re-ranking: agreement with an independent driver-side greedy
   * reference, redundancy demotion of a planted duplicate, λ edges, and
   * layout independence. */
-class MmrSpec extends AnyFunSuite {
+class MmrSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Normalization-robust exact dedup: canonical-key stages, variant
   * collapse, and what must NOT collapse. */
-class NormalizedDedupSpec extends AnyFunSuite {
+class NormalizedDedupSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class PackingSpec extends AnyFunSuite {
+class PackingSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   test("greedy packing: fills bins in id order, overflows start new bins, oversized docs isolate") {

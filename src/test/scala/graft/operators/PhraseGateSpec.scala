@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** Phrase search positional intersection + curation gate report/funnel. */
-class PhraseGateSpec extends AnyFunSuite {
+class PhraseGateSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

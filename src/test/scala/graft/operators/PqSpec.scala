@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Product-quantization ANN: codebook contract, encode determinism,
   * recall vs the exact baseline, degenerate-corpus behavior. */
-class PqSpec extends AnyFunSuite {
+class PqSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   private val dim = 64

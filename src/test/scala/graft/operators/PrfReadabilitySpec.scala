@@ -7,7 +7,7 @@ import graft.SharedSpark
 import graft.functions.Text
 
 /** PRF expansion term mining, readability arithmetic, gate co-failure. */
-class PrfReadabilitySpec extends AnyFunSuite {
+class PrfReadabilitySpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

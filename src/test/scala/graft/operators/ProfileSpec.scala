@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class ProfileSpec extends AnyFunSuite {
+class ProfileSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   test("profile: one row per column with exact stats, nulls counted, type-aware fields") {

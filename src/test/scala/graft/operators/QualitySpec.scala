@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SharedSpark
 
-class QualitySpec extends AnyFunSuite {
+class QualitySpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   import Quality._

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Int8 scalar quantization: code range, reconstruction-error bound,
   * cosine preservation, degenerate vectors, audit/codes consistency. */
-class QuantizeSpec extends AnyFunSuite {
+class QuantizeSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

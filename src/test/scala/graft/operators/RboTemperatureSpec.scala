@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** RBO ranking agreement + √-temperature mixture shares. */
-class RboTemperatureSpec extends AnyFunSuite {
+class RboTemperatureSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class RelationalSpec extends AnyFunSuite {
+class RelationalSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

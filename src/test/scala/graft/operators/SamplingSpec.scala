@@ -9,7 +9,7 @@ import graft.sources.Tables
 /** The reproducibility contract of hash-based sampling: stable across
   * runs AND partitionings, disjoint+exhaustive splits, no train/test
   * leakage per key, and fractions near their weights. */
-class SamplingSpec extends AnyFunSuite {
+class SamplingSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
 
-class Scd2Spec extends AnyFunSuite {
+class Scd2Spec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   private def ts(s: String) = Timestamp.valueOf(s)

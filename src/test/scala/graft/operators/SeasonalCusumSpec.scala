@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Seasonal profile residuals + CUSUM closed form vs the textbook
   * recurrence. */
-class SeasonalCusumSpec extends AnyFunSuite {
+class SeasonalCusumSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Integer k-means determinism and the within-cluster dedup rule on
   * hand-built vector sets. */
-class SemDedupSpec extends AnyFunSuite {
+class SemDedupSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** KMV sketches: exactness below k, bounded error above, layout
   * independence (the property the correctness gate relies on). */
-class SketchesSpec extends AnyFunSuite {
+class SketchesSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Skew diagnosis report: exact shares, null keys, salt suggestion.
   * (saltedJoin itself is covered in GraftExtensionsSpec.) */
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -8,7 +8,7 @@ import graft.SharedSpark
 /** dropDuplicateSpans: hand reassembly table, first-occurrence total
   * order (cross- and within-doc), empty docs, span-conservation
   * invariant, layout independence. */
-class SpanDedupSpec extends AnyFunSuite {
+class SpanDedupSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -8,7 +8,7 @@ import graft.SharedSpark
 /** Exact sparse TF-IDF cosine join: agreement with a driver-side
   * reference, content-over-boilerplate weighting, df-cut exactness of
   * surviving pairs, symmetry/ordering contracts. */
-class SparseCosineSpec extends AnyFunSuite {
+class SparseCosineSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

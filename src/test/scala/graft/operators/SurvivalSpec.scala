@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Kaplan–Meier: textbook table, censoring semantics, exact-zero snap,
   * distributed-cumsum layout independence. */
-class SurvivalSpec extends AnyFunSuite {
+class SurvivalSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

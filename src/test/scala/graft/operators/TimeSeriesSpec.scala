@@ -7,7 +7,7 @@ import java.sql.Date
 import graft.SharedSpark
 
 /** EWMA recurrence and LOCF gap filling on hand-built series. */
-class TimeSeriesSpec extends AnyFunSuite {
+class TimeSeriesSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

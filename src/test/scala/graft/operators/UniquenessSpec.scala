@@ -7,7 +7,7 @@ import graft.SharedSpark
 
 /** Candidate-key audit: hand case covering duplicate combos, null
   * members as row values, and the PK verdict. */
-class UniquenessSpec extends AnyFunSuite {
+class UniquenessSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 

@@ -30,7 +30,7 @@ class EmptyCorpusSpec extends AnyFunSuite {
         catch {
           case e: Throwable =>
             fail(s"${p.name} threw on empty corpus: ${e.getMessage}", e)
-        }
+        } finally graft.GraftSession.resetQueryState(spark) // as Verify does
       assert(n >= 0, s"${p.name} returned negative count")
     }
   }

@@ -31,7 +31,7 @@ class OneRowCorpusSpec extends AnyFunSuite {
         catch {
           case e: Throwable =>
             fail(s"${p.name} threw on one-row corpus: ${e.getMessage}", e)
-        }
+        } finally graft.GraftSession.resetQueryState(spark) // as Verify does
       assert(n >= 0, s"${p.name} returned negative count")
     }
   }

@@ -8,7 +8,7 @@ import graft.SharedSpark
   * posture depends on must be visible in the physical plan — a code
   * change that silently breaks pushdown or reintroduces a cross join
   * should fail here, not in a 100 TB run. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
 
   /** Plan of the probe's OPERATOR path, the body Bench times (the
@@ -138,6 +138,14 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(scans == 1, s"expected one lineitem scan, got $scans:\n$p")
   }
 
+  test("q161: Benford scans and aggregates lineitem once") {
+    val p = planOf("q161_benford")
+    // the total is a window over the 9 joined rows, not a second
+    // aggregate branch over its own scan
+    val scans = "FileScan parquet [^\\n]*l_extendedprice".r.findAllIn(p).length
+    assert(scans == 1, s"expected one l_extendedprice scan, got $scans:\n$p")
+  }
+
   test("q194: ANN margin-kNN plans bucket-keyed — no cross join, no dedup re-exchange") {
     val p = planOf("q194_margin_ann")
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"),
@@ -150,8 +158,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q183: exact two-hop ships neighbor ARRAYS, never wedge rows through an exchange") {
-    // twoHopReach eagerly materializes (its executed plan is the
-    // checkpoint barrier), so the guard mirrors its internal reach
+    // twoHopReach's plan reads its held statics, and the printed tree
+    // carries their build plans too, so substring checks on it would
+    // match the statics' operators; the guard mirrors its internal reach
     // shape — adjacency arrays, the O(m)-row array-shipping join, and
     // ONE distinct-union aggregate — kept in sync with Graph.scala by
     // hand. The r12 wedge form joined adj⋈adj and shipped Σ deg² rows;

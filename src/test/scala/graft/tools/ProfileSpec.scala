@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{BenchRunner, SharedSpark}
 import graft.sources.Tables
 
-class ProfileSpec extends AnyFunSuite {
+class ProfileSpec extends AnyFunSuite with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   private val base = SharedSpark.sf0001
 
