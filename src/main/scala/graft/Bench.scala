@@ -103,18 +103,19 @@ final class BenchRunner(spark: org.apache.spark.sql.SparkSession) {
     // otherwise dominate and mask operator regressions.
     val body = graft.queries.Probes.benchBody(name)
     // measurement validity: no timed run may read a previous run's
-    // caches; cleanup runs before the timer starts and is never timed
+    // caches; the boundary runs before the timer starts, timed apart
+    val b0 = System.nanoTime()
     GraftSession.resetQueryState(spark)
+    val boundaryMs = (System.nanoTime() - b0) / 1000000L
     telemetry.snapshotAndReset() // drop whatever bled in between queries
     graft.operators.Lifecycle.substrateStatsSnapshot()
     val compiles0 = compiles
     val gc0 = jvmGcMs
     val sec = Bench.time(body(spark, sfDir)
       .write.format("noop").mode("overwrite").save())
-    val (dMs, dTo, wMs, nR) =
-      graft.operators.Lifecycle.substrateStatsSnapshot()
+    val (_, _, wMs, nR) = graft.operators.Lifecycle.substrateStatsSnapshot()
     RunStats(sec, jvmGcMs - gc0, compiles - compiles0,
-      telemetry.snapshotAndReset(), SubstrateStats(dMs, dTo, wMs, nR))
+      telemetry.snapshotAndReset(), SubstrateStats(boundaryMs, wMs, nR))
   }
 
   /** One query's block: an untimed warm-up run (recorded in telemetry,
@@ -170,14 +171,14 @@ object Bench {
                          blocksRemoved: Long, spillBytes: Long, tasks: Long,
                          jobs: Long, taskRunMs: Long, shuffleBytes: Long)
 
-  /** Substrate counters for one timed run (round-13 optimization
-    * telemetry — see [[graft.operators.Lifecycle.substrateStatsSnapshot]]):
-    * driver wall ms spent polling in Lifecycle.drain, how many drains
-    * hit their deadline, wall ms inside diskRound writes, and the
-    * diskRound count. A slow iteration with zero task-level counters
-    * can still name its cause here. */
-  case class SubstrateStats(drainMs: Long, drainTimeouts: Long,
-                            roundWriteMs: Long, rounds: Long)
+  /** Substrate figures for one timed run: wall ms of the query
+    * boundary before it ([[GraftSession.resetQueryState]]: the drain,
+    * the release of what the previous run held and wrote, the cache
+    * clear), then — from [[graft.operators.Lifecycle.substrateStatsSnapshot]]
+    * — wall ms inside round writes and the round count. A slow
+    * iteration with zero task-level counters can still name its cause
+    * here. */
+  case class SubstrateStats(boundaryMs: Long, roundWriteMs: Long, rounds: Long)
 
   /** One timed execution: wall seconds (−1 on failure), whole-JVM GC
     * ms during the run (local mode: driver + executors are ONE JVM, so
@@ -345,8 +346,7 @@ object Bench {
         s""""blocks_removed":${jl(runs.map(_.c.blocksRemoved))},""" +
         s""""spill_mb":${jl(runs.map(_.c.spillBytes >> 20))},""" +
         s""""tasks":${jl(runs.map(_.c.tasks))},""" +
-        s""""drain_ms":${jl(runs.map(_.s.drainMs))},""" +
-        s""""drain_timeouts":${jl(runs.map(_.s.drainTimeouts))},""" +
+        s""""boundary_ms":${jl(runs.map(_.s.boundaryMs))},""" +
         s""""round_write_ms":${jl(runs.map(_.s.roundWriteMs))},""" +
         s""""rounds":${jl(runs.map(_.s.rounds))},""" +
         s""""jobs":${jl(runs.map(_.c.jobs))},""" +

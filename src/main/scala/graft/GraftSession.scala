@@ -81,8 +81,9 @@ object GraftSession {
   }
 
   /** Query-boundary reset, run between measured or verified queries:
-    * free the caches operators deferred past their call (globalRank),
-    * then any remaining SQL-cache entry, so no query substitutes an
+    * release the query scope (`Lifecycle.releaseDeferred`: what
+    * operators and `Dashboard.withFilters` held or wrote), then clear
+    * any remaining SQL-cache entry, so no query substitutes an
     * earlier query's InMemoryTableScan for its own computation or runs
     * against the storage footprint earlier queries left behind. */
   def resetQueryState(spark: SparkSession): Unit = {

@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * THE RULE. An operator that needs a frame computed once for several
   * consumers either HOLDS it ([[hold]]: persisted, MEMORY_AND_DISK,
-  * recomputable from its lineage) or WRITES A ROUND ([[diskRound]],
+  * recomputable from its lineage; [[holdNow]] also fills the cache at
+  * once and returns its exact size) or WRITES A ROUND ([[diskRound]],
   * [[diskRoundObserved]], a [[RoundSink]]: parquet scratch whose
   * read-back is a recomputable file scan). Both register with the
   * session's scope. The operator releases nothing itself: its returned
@@ -139,6 +140,34 @@ private[graft] object Lifecycle {
     if (df.storageLevel == StorageLevel.NONE) df.persist()
     scope(df.sparkSession).frames.push(df)
     df
+  }
+
+  /** [[hold]], filled now: one job over the cache's own blocks (plus
+    * any broadcast its plan builds) under the job description
+    * `description`, the previous description restored. An action on
+    * the frame would cost more: adaptive execution fills a cache in a
+    * stage of its own, then runs the action's stage. Returns the cache's
+    * exact size in bytes, which a caller can size its plan by; plan
+    * statistics only estimate it. */
+  def holdNow(df: DataFrame, description: String): Long = {
+    hold(df)
+    val qe = df.queryExecution
+    val cache = qe.sparkSession.sharedState.cacheManager
+      .lookupCachedData(qe.sparkSession, qe.analyzed)
+      .getOrElse(throw new IllegalStateException("a held frame has no cache entry"))
+      .cachedRepresentation.cacheBuilder
+    if (!cache.isCachedColumnBuffersLoaded) {
+      val sc = df.sparkSession.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(description)
+      // an SQL execution, as an action's: its tasks and driver compile
+      // generated classes under the same class loader, so both share one
+      // cache entry and a later refresh of the same shape compiles none
+      try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(description)) {
+        sc.runJob(cache.cachedColumnBuffers, (_: Iterator[_]) => ())
+      } finally sc.setJobDescription(prev)
+    }
+    cache.sizeInBytesStats.value
   }
 
   /** Eagerly materialize a per-round frame to RELIABLE storage: one

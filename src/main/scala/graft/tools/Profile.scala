@@ -93,7 +93,17 @@ object Profile {
     "orders" -> shift("o_orderkey", "o_custkey"),
     "customer" -> shift("c_custkey"),
     "events" -> shift("event_id", "user_id"),
-    "embeddings" -> shift("vec_id"),
+    "embeddings" -> { (df, i) =>
+      val shifted = shift("vec_id")(df, i)
+      // flip the sign of a replica-seeded half of the dimensions: an
+      // orthogonal map, so a replica's cosine structure is the base's,
+      // while a copy's cosine to its source falls to about 0 (exact
+      // copies share every LSH bucket, so bucket occupancy and the
+      // candidate work grew with the square of rep)
+      if (i == 0) shifted
+      else shifted.withColumn("embedding", transform(col("embedding"),
+        (x, j) => when(pmod(hash(lit(i), j), lit(2)) === 0, -x).otherwise(x)))
+    },
     "documents" -> { (df, i) =>
       val shifted = shift("doc_id")(df, i)
       // salt EVERY word with the replica id: cross-replica Jaccard

@@ -3,7 +3,7 @@ package graft.weather
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Relational
+import graft.operators.{Lifecycle, Relational}
 
 /** The dashboard query set Q1–Q6 (SURVEY.md §3.3) — the Looker-Studio
   * widgets' generated SQL re-expressed as parameterized DataFrame
@@ -13,21 +13,32 @@ import graft.operators.Relational
   * (row-group statistics). Over a fact from [[Store.readFact]] the `dt`
   * window also prunes date partitions: `graft.plans.DatePartitionBounds`
   * derives `p_date >= date(from) - 1` and `p_date <= date(to) + 1` (the
-  * day of slack covers the writer's time zone), so a widget opens only
+  * day of slack covers the writer's time zone), so the slice opens only
   * the window's days. The window's literals reach generated code as
   * `graft.plans.ParamLiteral`s, so a moved window compiles no new class.
   */
 object Dashboard {
 
-  /** F3/F4 parameterization: build the filter conjunction once. */
+  /** F3/F4, the filter controls: the one place a refresh reads the store.
+    * The filtered slice is held in the query scope and filled at once
+    * (jobs described `Dashboard.withFilters:slice`), so the widgets
+    * over it read the cache: a snapshot taken at this call,
+    * valid until the owner's boundary (`Lifecycle.releaseDeferred`).
+    * A slice no larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * comes back as one partition, which every widget's distribution
+    * accepts: each plans no exchange and runs as one job (`cityMap`
+    * adds its dim broadcast). A larger slice keeps its partitioning. */
   def withFilters(df: DataFrame, city: Option[String] = None,
                   from: Option[String] = None, to: Option[String] = None): DataFrame = {
-    val preds = Seq(
+    val slice = Seq(
       city.map(c => col("city_name") === lit(c)),
       from.map(f => col("dt") >= lit(f).cast("timestamp")),
       to.map(t => col("dt") <= lit(t).cast("timestamp"))
-    ).flatten
-    preds.foldLeft(df)(_ filter _)
+    ).flatten.foldLeft(df)(_ filter _)
+    val bytes = Lifecycle.holdNow(slice, "Dashboard.withFilters:slice")
+    val advisory = slice.queryExecution.sparkSession.sessionState.conf
+      .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (bytes <= advisory) slice.coalesce(1) else slice
   }
 
   /** Q1 (A7/W1): latest reading per city — "stores latest weather readings

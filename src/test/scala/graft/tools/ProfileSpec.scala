@@ -63,6 +63,23 @@ class ProfileSpec extends AnyFunSuite with graft.QueryBoundary {
     assert(r0.join(r1, "w").count() === 0)
   }
 
+  test("no replica-1 embedding equals its replica-0 source; norms and in-replica cosines stay") {
+    def vecs(dir: String): Map[Long, Seq[Double]] = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val (r0, r1) = vecs(x2).partition(_._1 < 100000000L)
+    assert(r0 === vecs(base) && r1.size === r0.size)
+    def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).map { case (x, y) => x * y }.sum
+    val ids = r0.keys.toSeq.sorted.take(20)
+    ids.foreach { id =>
+      val (src, copy) = (r0(id), r1(id + 100000000L))
+      assert(math.abs(dot(copy, copy) - dot(src, src)) < 1e-9, s"vec_id $id")
+      ids.foreach(o => assert(
+        math.abs(dot(copy, r1(o + 100000000L)) - dot(src, r0(o))) < 1e-9, s"$id, $o"))
+    }
+    assert(r0.keys.forall(id => r1(id + 100000000L) != r0(id)))
+  }
+
   test("graph and relational probes run through the shared bench runner") {
     val runner = new BenchRunner(spark)
     try Seq("q78_pagerank", "q01_pricing_summary").foreach { n =>

@@ -1,13 +1,20 @@
 package graft.weather
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
 import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
+import graft.operators.Lifecycle
+import org.apache.spark.graft.JobCount
 
 /** Dashboard queries Q1–Q6 over a two-hour two-city fixture; golden values
   * hand-computed. */
-class DashboardSpec extends AnyFunSuite {
+class DashboardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 
@@ -110,5 +117,100 @@ class DashboardSpec extends AnyFunSuite {
       assert(moved.head.map(_.getTimestamp(1)) === Seq(ts("2025-01-10 00:00:00")))
       assert(moved(2).size === 73)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  /** The bench's store (14 cities, 14 days of hourly readings, one
+    * partition per day) under a temporary directory: the fact joined to
+    * the city names, as a refresh filters it, and the cities dim. */
+  private def withBenchStore(body: (DataFrame, DataFrame) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dash_slice").toFile
+    try {
+      val t0 = ts("2025-01-01 00:00:00").getTime
+      val rows = for (c <- 1L to 14L; h <- 0 until 14 * 24) yield
+        (c, new java.sql.Timestamp(t0 + h * 3600000L), 20.0 + c + h % 24, 40 + h % 50,
+          1000 + c.toInt, 1.0 + h % 7)
+      Store.writeFactPartitioned(
+        rows.toDF("city_id", "dt", "temp", "humidity", "pressure", "wind_speed"),
+        s"$dir/fact", "dt", Seq(col("city_id"), col("dt")))
+      (1L to 14L).map(c => (c, s"city$c", 10.0 + c, 100.0 + c))
+        .toDF("city_id", "city_name", "coord_lat", "coord_lon").write.parquet(s"$dir/cities")
+      val cities = spark.read.parquet(s"$dir/cities")
+      body(Store.readFact(spark, s"$dir/fact")
+        .join(broadcast(cities.select("city_id", "city_name")), "city_id"), cities)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  private val (city, from, to) = ("city3", "2025-01-02 00:00:00", "2025-01-05 00:00:00")
+
+  /** The five widgets of a refresh over `view`, as the bench calls them. */
+  private def widgets(view: DataFrame, cities: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "latestPerCity" -> Dashboard.latestPerCity(view).select("city_id", "dt", "temp")
+      .orderBy("city_id"),
+    "scorecards" -> Dashboard.scorecards(view),
+    "temperatureByHour" -> Dashboard.temperatureByHour(view),
+    "cityMap" -> Dashboard.cityMap(view.drop("city_name"), cities),
+    "temperatureScale" -> Dashboard.temperatureScale(view))
+
+  /** Each widget's rows over the held `view` and over the same filters
+    * applied without a hold. */
+  private def sameRowsAsUnheld(view: DataFrame, fact: DataFrame, cities: DataFrame): Unit = {
+    val unheld = fact.filter(col("city_name") === city)
+      .filter(col("dt") >= lit(from).cast("timestamp"))
+      .filter(col("dt") <= lit(to).cast("timestamp"))
+    widgets(view, cities).zip(widgets(unheld, cities)).foreach { case ((n, got), (_, want)) =>
+      val rows = got.collect().toSeq
+      assert(rows.nonEmpty, n)
+      assert(rows === want.collect().toSeq, n)
+    }
+  }
+
+  test("a small slice serves every widget from one partition: no shuffle, one job (cityMap two)") {
+    withBenchStore { (fact, cities) =>
+      val sc = spark.sparkContext
+      sc.setJobDescription("refresh")
+      var view: DataFrame = null
+      val slice = try JobCount.descriptions(sc) {
+        view = Dashboard.withFilters(fact, Some(city), Some(from), Some(to))
+      } finally {
+        assert(sc.getLocalProperty("spark.job.description") === "refresh")
+        sc.setJobDescription(null)
+      }
+      assert(slice.nonEmpty && slice.size <= 2, slice)
+      assert(slice.forall(_ == "Dashboard.withFilters:slice"), slice)
+      widgets(view, cities).foreach { case (n, w) =>
+        val jobs = JobCount(sc)(w.collect())
+        val exchanges = collect(w.queryExecution.executedPlan) { case e: Exchange => e }
+        val shuffles = exchanges.filterNot(_.isInstanceOf[BroadcastExchangeLike])
+        assert(shuffles.isEmpty, s"$n: ${w.queryExecution.executedPlan}")
+        assert(exchanges.size === (if (n == "cityMap") 1 else 0), n)
+        assert(jobs === (if (n == "cityMap") 2 else 1), n)
+      }
+      sameRowsAsUnheld(view, fact, cities)
+    }
+  }
+
+  test("a slice above the advisory partition size keeps its partitioning and its answers") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try withBenchStore { (fact, cities) =>
+      val view = Dashboard.withFilters(fact, Some(city), Some(from), Some(to))
+      assert(collect(view.queryExecution.executedPlan) { case c: CoalesceExec => c }.isEmpty)
+      assert(view.rdd.getNumPartitions > 1)
+      sameRowsAsUnheld(view, fact, cities)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the query boundary leaves no cache entry for the slice") {
+    withBenchStore { (fact, _) =>
+      val view = Dashboard.withFilters(fact, Some(city), Some(from), Some(to))
+      val Seq(held) = view.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      val qe = view.queryExecution
+      def entry = qe.sparkSession.sharedState.cacheManager
+        .lookupCachedData(qe.sparkSession, held.cacheBuilder.logicalPlan)
+      assert(entry.nonEmpty && held.cacheBuilder.isCachedColumnBuffersLoaded)
+      Lifecycle.releaseDeferred(spark)
+      assert(entry.isEmpty && !held.cacheBuilder.isCachedColumnBuffersLoaded)
+    }
   }
 }

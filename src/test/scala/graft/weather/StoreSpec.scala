@@ -2,8 +2,9 @@ package graft.weather
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
@@ -11,7 +12,7 @@ import graft.SharedSpark
 /** Upsert-policy divergence + idempotence (SURVEY.md §5.3, FIXTURES.md §2:
   * "same (city_id, dt) twice with changed temp — DO UPDATE keeps the new
   * value, DO NOTHING keeps the old"). */
-class StoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class StoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with graft.QueryBoundary {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
 
@@ -358,13 +359,18 @@ class StoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** `q` over the window-marked read of a stored fact: its one scan in
     * the final plan, its rows, and the rows of `q` over a plain read of
-    * the same files (no derived bounds). */
+    * the same files (no derived bounds). Over `Dashboard.withFilters`
+    * the scan ran in the held slice's cached plan, so it is found there. */
   private def windowed(path: String, q: DataFrame => DataFrame, tsCol: String = "dt")
       : (FileSourceScanExec, Seq[String], Seq[String]) = {
     def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = collect(p) {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+    }.flatten
     val df = q(Store.readFact(spark, path, tsCol))
     val got = rows(df)
-    val Seq(scan) = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    val Seq(scan) = scans(df.queryExecution.executedPlan)
     (scan, got, rows(q(spark.read.parquet(path).drop("p_date"))))
   }
   private def pDateBounded(scan: FileSourceScanExec): Boolean =
